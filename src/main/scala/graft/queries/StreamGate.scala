@@ -1,12 +1,14 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.Checkpointed
 import graft.streaming.Streams
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.types.StructType
 
-import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 
 /** Driver-gated STREAMING queries: each runs a real micro-batch pipeline
   * (produce → `graft-topic` → readStream → stateful transform → sink) to a
@@ -23,31 +25,55 @@ import scala.collection.concurrent.TrieMap
   * stream mid-backlog and RESUMES it from the checkpoint — the oracle hash
   * breaks on any replayed or skipped record, so exactly-once restart is
   * value-checked, not just spec'd.
+  *
+  * A gate states only its topic, its transform or fold, its sink and its
+  * assertions; the plumbing is shared: [[topicFor]] produces each input
+  * topic once, `readTopic` is the admission-capped parsed stream,
+  * `runToEnd` drains a writer and asserts its data-batch count, [[Fold]]
+  * holds foreachBatch state as scoped checkpoints, and `killAndResume`
+  * is the mid-backlog restart of s05/s25/s28.
   */
 object StreamGate {
 
-  /** One produced events topic per sf directory, JVM-scoped like
-    * [[HttpEnrichment.usersServer]]: key = user_id, value = JSON
-    * `{user_id, event_type, value}`, record timestamp = event time,
-    * 8 partitions. Every gate query derives its input from this single
-    * topic (s01/s04 parse event_type+value, s02 needs only the key,
-    * s03/s05 parse user_id+value), so the produce cost is paid once per
-    * (JVM, sf dir) instead of once per query invocation — bench best-of-N
-    * reruns skip it entirely. Heap bound: one JSON copy of `events` per
-    * sf dir (~15 MB at sf0.1), held for the life of the JVM. */
-  private val sharedTopics = TrieMap.empty[String, String]
-  private def eventsTopic(s: SparkSession, dir: String): String = synchronized {
-    sharedTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_events_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.events(s, dir)
-        .select(col("user_id").cast("string").as("key"),
-          to_json(struct(col("user_id"), col("event_type"), col("value"))).as("value"),
-          col("ts").as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "8").save()
+  /** Every produced gate topic, keyed by (kind, sf dir) and JVM-scoped
+    * like [[HttpEnrichment.usersServer]]: the produce cost is paid once
+    * per (JVM, sf dir) instead of once per query invocation — bench
+    * best-of-N reruns skip it entirely. Heap bound: one JSON copy of each
+    * topic's rows per sf dir (~15 MB for `events` at sf0.1), held for the
+    * life of the JVM. */
+  private val topics = mutable.Map.empty[(String, String), String]
+
+  /** The `kind` topic for `dir`; `rows` (key, value, timestamp) are
+    * produced into it on first use only. */
+  private[queries] def topicFor(kind: String, dir: String, partitions: Int = 4)(
+      rows: => DataFrame): String = synchronized {
+    topics.getOrElseUpdate((kind, dir), {
+      val topic = s"gate_${kind}_${java.util.UUID.randomUUID().toString.take(8)}"
+      rows.write.format("graft-topic").mode("append")
+        .option("topic", topic).option("partitions", partitions.toString).save()
       topic
     })
   }
+
+  /** The record timestamp of topics whose gates use no event time. */
+  private val noEventTime = to_timestamp(lit("2024-01-01 00:00:00"))
+
+  /** `df` as topic records: `key` the record key, the JSON object of
+    * `fields` the value, `ts` the record timestamp. */
+  private def records(df: DataFrame, key: Column, ts: Column = noEventTime)(
+      fields: Column*): DataFrame =
+    df.select(key.cast("string").as("key"), to_json(struct(fields: _*)).as("value"),
+      ts.as("timestamp"))
+
+  /** The shared events topic: key = user_id, value = JSON `{user_id,
+    * event_type, value}`, record timestamp = event time, 8 partitions.
+    * Most event gates derive their input from this single topic (s01/s04
+    * parse event_type+value, s02 needs only the key, s03/s05 parse
+    * user_id+value). */
+  private def eventsTopic(s: SparkSession, dir: String): String =
+    topicFor("events", dir, partitions = 8)(records(Tables.events(s, dir),
+      col("user_id"), col("ts"))(col("user_id"), col("event_type"), col("value")))
+  private val eventsDdl = "user_id BIGINT, event_type STRING, value DOUBLE"
 
   /** Total records currently in the shared topic (driver-side; on real
     * Kafka this is the admin-API end-offset sum). Sizes the per-trigger
@@ -57,194 +83,92 @@ object StreamGate {
 
   /** Per-user metadata CHANGELOG topic for the stream-stream join (s06):
     * one record per distinct events user, tier = pure function of the id
-    * so the oracle reproduces the join arithmetically. Memoized per
-    * (JVM, sf dir) like [[eventsTopic]]. */
-  private val metaTopics = TrieMap.empty[String, String]
-  private def userMetaTopic(s: SparkSession, dir: String): String = synchronized {
-    metaTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_usermeta_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.events(s, dir).select(col("user_id")).distinct()
-        .select(col("user_id").cast("string").as("key"),
-          to_json(struct(col("user_id").as("m_user_id"),
-            concat(lit("T"), (col("user_id") % 3).cast("string")).as("tier"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * so the oracle reproduces the join arithmetically. */
+  private def userMetaTopic(s: SparkSession, dir: String): String =
+    topicFor("usermeta", dir)(records(Tables.events(s, dir).select(col("user_id")).distinct(),
+      col("user_id"))(col("user_id").as("m_user_id"),
+      concat(lit("T"), (col("user_id") % 3).cast("string")).as("tier")))
 
   /** Query-VECTOR topic for the streaming ANN serving gate (s08): the
     * x45 query-side convention (every 50th embedding) serialized as
     * JSON. Doubles survive the to_json/from_json round trip bit-exactly
     * (shortest-roundtrip repr on write, correctly-rounded parse), so the
     * streamed vectors equal the parquet vectors and the oracle can read
-    * `embeddings` directly. Memoized per (JVM, sf dir). */
-  private val queryTopics = TrieMap.empty[String, String]
-  private def queryVecTopic(s: SparkSession, dir: String): String = synchronized {
-    queryTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_queryvec_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.embeddings(s, dir).filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").cast("string").as("key"),
-          to_json(struct(col("vec_id").as("q_id"),
-            col("embedding").cast("array<double>").as("qv"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * `embeddings` directly. */
+  private def queryVecTopic(s: SparkSession, dir: String): String =
+    topicFor("queryvec", dir)(records(Tables.embeddings(s, dir).filter(col("vec_id") % 50 === 0),
+      col("vec_id"))(col("vec_id").as("q_id"), col("embedding").cast("array<double>").as("qv")))
+
+  /** `embeddings` rows matching `keep` as (vec_id, v) vector records —
+    * the arrival topics of the index-maintenance gates. */
+  private def vectorRecords(s: SparkSession, dir: String, keep: Column): DataFrame =
+    records(Tables.embeddings(s, dir).filter(keep), col("vec_id"))(
+      col("vec_id"), col("embedding").cast("array<double>").as("v"))
+  private val vectorDdl = "vec_id BIGINT, v ARRAY<DOUBLE>"
 
   /** Arriving-VECTORS topic for the streaming delta-index ANN serving
     * gate (s11): x70's delta convention (every 7th corpus vector,
     * query rows excluded) serialized as JSON — the vectors that arrived
-    * since the static index was written. Memoized per (JVM, sf dir). */
-  private val arrivalTopics = TrieMap.empty[String, String]
-  private def arrivalVecTopic(s: SparkSession, dir: String): String = synchronized {
-    arrivalTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_arrvec_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.embeddings(s, dir)
-        .filter(col("vec_id") % 50 =!= 0 && col("vec_id") % 7 === 0)
-        .select(col("vec_id").cast("string").as("key"),
-          to_json(struct(col("vec_id"),
-            col("embedding").cast("array<double>").as("v"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * since the static index was written. */
+  private def arrivalVecTopic(s: SparkSession, dir: String): String =
+    topicFor("arrvec", dir)(vectorRecords(s, dir,
+      col("vec_id") % 50 =!= 0 && col("vec_id") % 7 === 0))
 
   /** Arrival topic for the APPEND-ONLY index gate (s15): x89's corpus is
     * vec_id ≠ 0 and the streamed split is its % 7 = 0 slice (distinct
     * from [[arrivalVecTopic]], whose corpus excludes % 50 = 0 query
-    * rows). Memoized per (JVM, sf dir). */
-  private val arrival7Topics = TrieMap.empty[String, String]
-  private def arrivalVec7Topic(s: SparkSession, dir: String): String = synchronized {
-    arrival7Topics.getOrElseUpdate(dir, {
-      val topic = s"gate_arrvec7_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.embeddings(s, dir)
-        .filter(col("vec_id") =!= 0 && col("vec_id") % 7 === 0)
-        .select(col("vec_id").cast("string").as("key"),
-          to_json(struct(col("vec_id"),
-            col("embedding").cast("array<double>").as("v"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * rows). */
+  private def arrivalVec7Topic(s: SparkSession, dir: String): String =
+    topicFor("arrvec7", dir)(vectorRecords(s, dir,
+      col("vec_id") =!= 0 && col("vec_id") % 7 === 0))
 
   /** Arrival topic for the streaming GRAPH-maintenance gate (s16):
     * x90/x91's delta split — vec_id % 7 = 0, INCLUDING vec 0 (unlike
     * [[arrivalVec7Topic]]) — so the folded graph replays x90's oracle
-    * verbatim. Memoized per (JVM, sf dir). */
-  private val arrivalGraphTopics = TrieMap.empty[String, String]
-  private def arrivalGraphTopic(s: SparkSession, dir: String): String = synchronized {
-    arrivalGraphTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_arrg_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.embeddings(s, dir)
-        .filter(col("vec_id") % 7 === 0)
-        .select(col("vec_id").cast("string").as("key"),
-          to_json(struct(col("vec_id"),
-            col("embedding").cast("array<double>").as("v"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * verbatim. */
+  private def arrivalGraphTopic(s: SparkSession, dir: String): String =
+    topicFor("arrg", dir)(vectorRecords(s, dir, col("vec_id") % 7 === 0))
 
   /** Incoming-DOCUMENTS topic for the streaming ingest-screening gate
     * (s09): the x50 batch side (doc_id ≥ 400) serialized as JSON — the
     * arrival stream of an ingest pipeline whose corpus (doc_id < 400)
-    * is the static reference. Memoized per (JVM, sf dir). */
-  private val docTopics = TrieMap.empty[String, String]
-  private def incomingDocsTopic(s: SparkSession, dir: String): String = synchronized {
-    docTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_docs_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.documents(s, dir).filter(col("doc_id") >= 400)
-        .select(col("doc_id").cast("string").as("key"),
-          to_json(struct(col("doc_id"), col("text"), col("lang"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * is the static reference. */
+  private def incomingDocsTopic(s: SparkSession, dir: String): String =
+    topicFor("docs", dir)(records(Tables.documents(s, dir).filter(col("doc_id") >= 400),
+      col("doc_id"))(col("doc_id"), col("text"), col("lang")))
+  private val incomingDocsDdl = "doc_id BIGINT, text STRING, lang STRING"
 
   /** BENCHMARK-DOC topic for the streaming decontamination gate (s29):
     * x125's benchmark side (the planted %13 eval set, bench_id =
     * doc_id + 300000) serialized as JSON — the living-eval-suite feed
-    * whose arrivals the gate audits incrementally. Memoized per
-    * (JVM, sf dir). */
-  private val benchTopics = TrieMap.empty[String, String]
-  private def benchDocsTopic(s: SparkSession, dir: String): String = synchronized {
-    benchTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_bench_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.documents(s, dir).filter(col("doc_id") % 13 === 0)
-        .select((col("doc_id") + 300000).cast("string").as("key"),
-          to_json(struct((col("doc_id") + 300000).as("bench_id"),
-            col("text"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * whose arrivals the gate audits incrementally. */
+  private def benchDocsTopic(s: SparkSession, dir: String): String =
+    topicFor("bench", dir)(records(Tables.documents(s, dir).filter(col("doc_id") % 13 === 0),
+      col("doc_id") + 300000)((col("doc_id") + 300000).as("bench_id"), col("text")))
 
   /** Whole-corpus document topic for the streaming CDC-digest gate
     * (s31): every `documents` row as JSON (doc_id, text) — the arrival
     * feed whose per-batch content-defined chunks fold into the
-    * maintained chunk-digest table. Memoized per (JVM, sf dir). */
-  private val allDocTopics = TrieMap.empty[String, String]
-  private def allDocsTopic(s: SparkSession, dir: String): String = synchronized {
-    allDocTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_alldocs_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.documents(s, dir)
-        .select(col("doc_id").cast("string").as("key"),
-          to_json(struct(col("doc_id"), col("text"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * maintained chunk-digest table. */
+  private def allDocsTopic(s: SparkSession, dir: String): String =
+    topicFor("alldocs", dir)(records(Tables.documents(s, dir), col("doc_id"))(
+      col("doc_id"), col("text")))
+  private val allDocsDdl = "doc_id BIGINT, text STRING"
 
   /** Source-attributed document topic for the streaming TF-IDF gate
-    * (s34): every `documents` row as JSON (doc_id, source, text).
-    * Memoized per (JVM, sf dir). */
-  private val srcDocTopics = TrieMap.empty[String, String]
-  private def srcDocsTopic(s: SparkSession, dir: String): String = synchronized {
-    srcDocTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_srcdocs_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.documents(s, dir)
-        .select(col("doc_id").cast("string").as("key"),
-          to_json(struct(col("doc_id"), col("source"), col("text"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * (s34): every `documents` row as JSON (doc_id, source, text). */
+  private def srcDocsTopic(s: SparkSession, dir: String): String =
+    topicFor("srcdocs", dir)(records(Tables.documents(s, dir), col("doc_id"))(
+      col("doc_id"), col("source"), col("text")))
+  private val srcDocsDdl = "doc_id BIGINT, source STRING, text STRING"
 
   /** Typed-measurement topic for the streaming anomaly gate (s21):
     * events re-serialized WITH their event_id (the shared
     * [[eventsTopic]] carries only user/type/value — the z-score report
-    * is per event id). Memoized per (JVM, sf dir). */
-  private val measureTopics = TrieMap.empty[String, String]
-  private def measurementsTopic(s: SparkSession, dir: String): String = synchronized {
-    measureTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_meas_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.events(s, dir)
-        .select(col("event_id").cast("string").as("key"),
-          to_json(struct(col("event_id"), col("event_type"), col("value"))).as("value"),
-          col("ts").as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * is per event id). */
+  private def measurementsTopic(s: SparkSession, dir: String): String =
+    topicFor("meas", dir)(records(Tables.events(s, dir), col("event_id"), col("ts"))(
+      col("event_id"), col("event_type"), col("value")))
 
   /** TIME-ORDERED typed-event topic for the streaming Markov gate
     * (s23): events WITH their event_id (the transition tie-break),
@@ -253,42 +177,20 @@ object StreamGate {
     * offset-ranged admission preserves that order across batches: the
     * per-user in-order prerequisite of
     * [[graft.ops.EventAnalytics.transitionBatchPairs]] (the s07/s20
-    * backfill-producer shape). Memoized per (JVM, sf dir). */
-  private val seqTopics = TrieMap.empty[String, String]
-  private def orderedTypedEventsTopic(s: SparkSession, dir: String): String = synchronized {
-    seqTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_evseq_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.events(s, dir)
-        .repartition(1).sortWithinPartitions("ts", "event_id")
-        .select(col("user_id").cast("string").as("key"),
-          to_json(struct(col("user_id"), col("event_id"),
-            col("event_type"))).as("value"),
-          col("ts").as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * backfill-producer shape). */
+  private def orderedTypedEventsTopic(s: SparkSession, dir: String): String =
+    topicFor("evseq", dir)(records(
+      Tables.events(s, dir).repartition(1).sortWithinPartitions("ts", "event_id"),
+      col("user_id"), col("ts"))(col("user_id"), col("event_id"), col("event_type")))
 
   /** CATALOG-ROW topic for the streaming profile gate (s26): x119's
     * profiled projection of `documents` (id, lang, source, n_chars)
     * serialized as JSON; the planted lang_dirty null pattern is a pure
-    * function of doc_id, recomputed after parse. Memoized per
-    * (JVM, sf dir). */
-  private val catalogTopics = TrieMap.empty[String, String]
-  private def docsCatalogTopic(s: SparkSession, dir: String): String = synchronized {
-    catalogTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_cat_${java.util.UUID.randomUUID().toString.take(8)}"
-      Tables.documents(s, dir)
-        .select(col("doc_id").cast("string").as("key"),
-          to_json(struct(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+    * function of doc_id, recomputed after parse. */
+  private def docsCatalogTopic(s: SparkSession, dir: String): String =
+    topicFor("cat", dir)(records(Tables.documents(s, dir), col("doc_id"))(
+      col("doc_id"), col("lang"), col("source"), col("n_chars")))
+  private val docsCatalogDdl = "doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT"
 
   /** ORDERED chunk-stream topic for the streaming packing gate (s27):
     * x128's chunk rows (doc_id, source, chunk_idx, n_chunk_tokens)
@@ -296,49 +198,30 @@ object StreamGate {
     * each source's chunks sit in one partition in pack order, so
     * offset-ranged admission hands every micro-batch a contiguous
     * ordered per-shard segment: the prerequisite of
-    * [[graft.ops.Chunking.packChunksStrictFold]]'s resume law.
-    * Memoized per (JVM, sf dir). */
-  private val chunkTopics = TrieMap.empty[String, String]
-  private def chunkStreamTopic(s: SparkSession, dir: String): String = synchronized {
-    chunkTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_chunks_${java.util.UUID.randomUUID().toString.take(8)}"
+    * [[graft.ops.Chunking.packChunksStrictFold]]'s resume law. */
+  private def chunkStreamTopic(s: SparkSession, dir: String): String =
+    topicFor("chunks", dir)(records(
       graft.ops.Chunking.chunk(Tables.documents(s, dir), "doc_id", "text",
           chunkTokens = 50, overlap = 10, keepCols = Seq("source"))
         .select("doc_id", "source", "chunk_idx", "n_chunk_tokens")
-        .repartition(1).sortWithinPartitions("doc_id", "chunk_idx")
-        .select(col("source").as("key"),
-          to_json(struct(col("doc_id"), col("source"), col("chunk_idx"),
-            col("n_chunk_tokens"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+        .repartition(1).sortWithinPartitions("doc_id", "chunk_idx"),
+      col("source"))(col("doc_id"), col("source"), col("chunk_idx"), col("n_chunk_tokens")))
+  private val chunksDdl = "doc_id BIGINT, source STRING, chunk_idx INT, n_chunk_tokens INT"
 
   /** HOT-REGION arrivals topic for the streaming Z-order compaction
     * gate (s22): x126's spatially-clustered delta — the %5 lineitem
     * rows whose partkey sits in the bottom 1/16 of the STATIC split's
     * span — serialized as JSON. The static-split bounds are computed at
-    * produce time (they are the written tree's model in the gate too).
-    * Memoized per (JVM, sf dir). */
-  private val zdeltaTopics = TrieMap.empty[String, String]
-  private def zorderDeltaTopic(s: SparkSession, dir: String): String = synchronized {
-    zdeltaTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_zdelta_${java.util.UUID.randomUUID().toString.take(8)}"
+    * produce time (they are the written tree's model in the gate too). */
+  private def zorderDeltaTopic(s: SparkSession, dir: String): String =
+    topicFor("zdelta", dir) {
       val li = Tables.lineitem(s, dir)
       val r = li.filter(col("l_orderkey") % 5 =!= 0)
         .agg(min(col("l_partkey").cast("long")), max(col("l_partkey").cast("long"))).head()
       val cut = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 16
-      li.filter(col("l_orderkey") % 5 === 0 && col("l_partkey") <= cut)
-        .select(col("l_orderkey").cast("string").as("key"),
-          to_json(struct(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+      records(li.filter(col("l_orderkey") % 5 === 0 && col("l_partkey") <= cut),
+        col("l_orderkey"))(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
+    }
 
   /** DIMENSION-SNAPSHOT topic for the streaming SCD2 gate (s20): the
     * x118 four-snapshot stack serialized as JSON, produced by ONE
@@ -347,26 +230,18 @@ object StreamGate {
     * order, and key-hash routing preserves each id's version order per
     * partition (all of an id's rows share a partition). Admission caps
     * then split versions MID-batch, exercising the partial-snapshot
-    * decomposability of scd2Apply. Memoized per (JVM, sf dir). */
-  private val scdTopics = TrieMap.empty[String, String]
-  private def docSnapshotsTopic(s: SparkSession, dir: String): String = synchronized {
-    scdTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_scd_${java.util.UUID.randomUUID().toString.take(8)}"
+    * decomposability of scd2Apply. */
+  private def docSnapshotsTopic(s: SparkSession, dir: String): String =
+    topicFor("scd", dir) {
       val docs = Tables.documents(s, dir).select("doc_id", "text")
-      (0 to 3).map { v =>
+      records((0 to 3).map { v =>
         docs.select(col("doc_id"), lit(v).as("version"),
           concat(col("text"),
             expr(s"repeat('!', $v div (1 + doc_id % 3))")).as("text"))
       }.reduce(_ unionByName _)
-        .repartition(1).sortWithinPartitions("version", "doc_id")
-        .select(col("doc_id").cast("string").as("key"),
-          to_json(struct(col("doc_id"), col("version"), col("text"))).as("value"),
-          to_timestamp(lit("2024-01-01 00:00:00")).as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+        .repartition(1).sortWithinPartitions("version", "doc_id"),
+        col("doc_id"))(col("doc_id"), col("version"), col("text"))
+    }
 
   /** TIME-ORDERED events replay topic for the state-EVICTION gate (s07).
     * Differences from [[eventsTopic]], both load-bearing:
@@ -391,10 +266,8 @@ object StreamGate {
     *
     * On real Kafka this is a backfill producer writing in log order — the
     * standard replay shape for watermarked reprocessing. */
-  private val orderedTopics = TrieMap.empty[String, String]
-  private def orderedEventsTopic(s: SparkSession, dir: String): String = synchronized {
-    orderedTopics.getOrElseUpdate(dir, {
-      val topic = s"gate_events_time_${java.util.UUID.randomUUID().toString.take(8)}"
+  private def orderedEventsTopic(s: SparkSession, dir: String): String =
+    topicFor("events_time", dir) {
       val ev = Tables.events(s, dir).select("user_id", "event_type", "value", "ts")
       val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
       val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 100L * 24 * 3600 * 1000)
@@ -403,16 +276,9 @@ object StreamGate {
         when(col("id") === 0, "click").otherwise("purchase").as("event_type"),
         lit(0.0).as("value"),
         lit(sentinelTs).as("ts"))
-      ev.unionByName(sentinels)
-        .repartition(1).sortWithinPartitions("ts")
-        .select(col("user_id").cast("string").as("key"),
-          to_json(struct(col("user_id"), col("event_type"), col("value"))).as("value"),
-          col("ts").as("timestamp"))
-        .write.format("graft-topic").mode("append")
-        .option("topic", topic).option("partitions", "4").save()
-      topic
-    })
-  }
+      records(ev.unionByName(sentinels).repartition(1).sortWithinPartitions("ts"),
+        col("user_id"), col("ts"))(col("user_id"), col("event_type"), col("value"))
+    }
 
   /** The replayed topic interleaves 30 days of event time across batches
     * in (partitioned) APPEND order, not time order — a multi-batch drain
@@ -485,6 +351,104 @@ object StreamGate {
     }
   }
 
+  /** The gate's stream over `topic`. `perTrigger` maps the topic's size
+    * to the records admitted per micro-batch (at least 1; without it the
+    * whole backlog is one batch). With a `ddl`, each record comes out as
+    * its `key`, its event time `ts` and the value's JSON fields beside
+    * them; without one, as the source's raw columns. */
+  private def readTopic(s: SparkSession, topic: String, ddl: String = "",
+                        perTrigger: Option[Long => Long] = None): DataFrame = {
+    val r = s.readStream.format("graft-topic").option("topic", topic)
+    val raw = perTrigger.fold(r)(f =>
+      r.option("maxRecordsPerTrigger", math.max(1L, f(topicSize(topic))).toString)).load()
+    if (ddl.isEmpty) raw
+    else raw.select(col("key"), col("timestamp").as("ts"),
+        from_json(col("value").cast("string"), StructType.fromDDL(ddl)).as("j"))
+      .select("key", "ts", "j.*")
+  }
+
+  /** A foreachBatch writer running `f` on every micro-batch that carries
+    * data. */
+  private def eachBatch(df: DataFrame)(f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream.foreachBatch { (b: DataFrame, id: Long) => if (!b.isEmpty) f(b, id) }
+
+  /** Start `w` under a fresh checkpoint, drain it to the end of its
+    * topic (AvailableNow) and require at least `minBatches` data batches;
+    * `tooFew` words the failure from the count that ran. */
+  private def runToEnd(tag: String, w: DataStreamWriter[Row], minBatches: Int = 2)(
+      tooFew: Int => String): StreamingQuery = {
+    val ckpt = gateTmpDir(s"${tag}_ckpt_")
+    val q = w.option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.AvailableNow()).start()
+    drain(q, ckpt)
+    require(dataBatches(q) >= minBatches, tooFew(dataBatches(q)))
+    q
+  }
+
+  /** Checkpoint-resume: a leg of `leg` (the writer, built afresh per leg)
+    * is STOPPED mid-backlog after ≥2 committed batches, then a second leg
+    * resumes from the same checkpoint and drains the rest — it must
+    * process data, or leg 1 drained the whole backlog and nothing was
+    * resumed. The cut is signalled from the progress LISTENER (fires on
+    * batch commit), not a lastProgress poll — the listener latch makes
+    * the cut point deterministic at its source, so leg 1 cannot race
+    * through the remaining backlog between a late poll and stop() on a
+    * fast fixture (ADVICE r6). Where exactly the cut lands past batch 2
+    * doesn't matter — the oracle hash catches any replay/skip wherever it
+    * falls. */
+  private def killAndResume(s: SparkSession, tag: String,
+                            leg: () => DataStreamWriter[Row]): Unit = {
+    val ckpt = gateTmpDir(s"${tag}_ckpt_")
+    def start(): StreamingQuery = leg().option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.AvailableNow()).start()
+    val cut = new java.util.concurrent.CountDownLatch(1)
+    // runId captured in onQueryStarted — Spark posts that event
+    // SYNCHRONOUSLY before start() returns, so leg1Run is assigned
+    // before the first trigger can possibly commit (no window in
+    // which a batch>=2 progress event could be dropped, ADVICE r7).
+    // Only leg 1 starts while this listener is registered (removed
+    // before leg 2; withGateConf enforces sequential gates), so the
+    // first-started guard can't latch onto a foreign query.
+    @volatile var leg1Run: java.util.UUID = null
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        if (leg1Run == null) leg1Run = e.runId
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.runId == leg1Run && e.progress.batchId >= 2) cut.countDown()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.runId == leg1Run) cut.countDown() // failed/finished leg: don't hang
+    }
+    s.streams.addListener(listener)
+    val q1 = start()
+    // belt-and-braces: onQueryStarted has already run (synchronous),
+    // but assert the contract rather than silently depend on it
+    require(leg1Run == q1.runId,
+      s"$tag listener captured runId $leg1Run but leg 1 is ${q1.runId}")
+    // The stop window's expected abort cascade (task aborted /
+    // failedToCommitStateFileError from the interrupted in-flight
+    // batch) is silenced — scoped to exactly this stop+drain, so a
+    // real state-store failure anywhere else still logs.
+    try {
+      if (!q1.isActive) cut.countDown() // terminated before runId was set
+      cut.await(120, java.util.concurrent.TimeUnit.SECONDS)
+    } finally {
+      try graft.util.QuietLogs.withQuiet() {
+        cleanupStep("leg1 stop")(q1.stop())
+        // drain to full termination INSIDE the quiet window so the
+        // async abort cascade on executor threads is covered too; a
+        // stopped query returns normally, a genuinely failed one
+        // still throws out of here
+        q1.awaitTermination()
+      } finally cleanupStep("leg1 listener remove")(
+        s.streams.removeListener(listener))
+    }
+    if (sys.env.contains("SPARK_GRAFT_GATE_DEBUG")) dumpProgress(q1)
+    val q2 = start()
+    drain(q2, ckpt)
+    require(dataBatches(q2) >= 1,
+      s"$tag resume leg processed nothing — leg 1 drained the whole backlog")
+  }
+
   /** Drain the stream, then stop it and delete the checkpoint — each step
     * isolated, so a failing stop() can't leak and no cleanup error masks
     * the stream's own exception (reported to stderr instead). The shared
@@ -512,13 +476,6 @@ object StreamGate {
     try f catch { case e: Throwable =>
       System.err.println(s"[stream-gate] $what failed: ${e.getMessage}") }
 
-  // Scoped silencing of the expected stop-interrupt abort cascade lives
-  // in [[graft.util.QuietLogs]] (shared with the streaming specs'
-  // intentional end-of-test stops).
-  private def withQuietLoggers[T](names: Seq[String])(body: => T): T =
-    graft.util.QuietLogs.withQuiet(names)(body)
-  private val interruptNoiseLoggers = graft.util.QuietLogs.interruptNoise
-
   /** Batches that actually carried data (AvailableNow plans a trailing
     * empty batch; don't count it). */
   private def dataBatches(q: StreamingQuery): Int =
@@ -535,6 +492,40 @@ object StreamGate {
     out
   }
 
+  /** State a gate folds its micro-batches into, held as a scoped
+    * checkpoint: each [[update]] materializes the next state before it
+    * frees the previous one, so one copy is live between batches (the
+    * kCore discipline). */
+  private[queries] final class Fold {
+    private var held: Checkpointed = null
+
+    /** The current state; null before the first batch (the fold
+      * operators' "no prior state"). */
+    def state: DataFrame = if (held == null) null else held.df
+
+    /** Fold one batch in: `first` builds the state when there is none,
+      * `next` derives it from the current one otherwise. */
+    def update(first: => DataFrame)(next: DataFrame => DataFrame): Unit = {
+      val n = graft.ops.Caches.localCheckpointScoped(
+        if (held == null) first else next(held.df))
+      release()
+      held = n
+    }
+
+    def release(): Unit = if (held != null) { held.release(); held = null }
+
+    /** The final state, handed to the [[graft.ops.Caches]] registry so
+      * the harness frees it with the query's other blocks. */
+    def result(): DataFrame = graft.ops.Caches.adopt(held)
+  }
+
+  private[queries] object Fold {
+    /** Run `body`; if it throws, every fold's live state is released
+      * first — a failed drain or fold must not strand scoped blocks. */
+    def guard[T](folds: Fold*)(body: => T): T =
+      try body catch { case t: Throwable => folds.foreach(_.release()); throw t }
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Watermark + tumbling 1-day window counts over the replayed topic,
@@ -548,29 +539,15 @@ object StreamGate {
     // single-batch must fail loudly, not silently weaken the gate.
     "s01_stream_window_counts" -> { (s, dir) =>
       val topic = eventsTopic(s, dir)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val mem = s"s01_result_$run"
+      val mem = s"s01_result_${java.util.UUID.randomUUID().toString.take(8)}"
       withGateConf(s) {
-        val parsed = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, topicSize(topic) / 6).toString)
-          .load()
-          .select(col("timestamp").as("ts"),
-            from_json(col("value").cast("string"), org.apache.spark.sql.types
-              .StructType.fromDDL("event_type STRING, value DOUBLE")).as("j"))
-          .select(col("ts"), col("j.event_type").as("event_type"),
-            col("j.value").as("value"))
+        val parsed = readTopic(s, topic, eventsDdl, Some(n => n / 6))
+          .select("ts", "event_type", "value")
         val agg = Streams.windowedCounts(parsed, "ts",
           watermark = replayWatermark, windowDuration = "1 day")
-        val ckpt = gateTmpDir("s01_ckpt_")
-        val q = agg.writeStream.format("memory").queryName(mem)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s01 must exercise cross-batch state merge; ran ${dataBatches(q)} data batches")
+        runToEnd("s01", agg.writeStream.format("memory").queryName(mem)
+          .outputMode("complete"))(n =>
+          s"s01 must exercise cross-batch state merge; ran $n data batches")
         materialized(s, mem, s.table(mem).orderBy("win_start", "event_type"))
       }
     },
@@ -591,8 +568,7 @@ object StreamGate {
     // batch answer, which is the oracle.
     "s08_stream_ann_serving" -> { (s, dir) =>
       val topic = queryVecTopic(s, dir)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val mem = s"s08_result_$run"
+      val mem = s"s08_result_${java.util.UUID.randomUUID().toString.take(8)}"
       withGateConf(s) {
         val corpus = Tables.embeddings(s, dir).filter(col("vec_id") % 50 =!= 0)
         // persist both static sides: a stream-static join re-evaluates the
@@ -605,14 +581,7 @@ object StreamGate {
           graft.ops.Similarity.annBuildBandIndex(corpus, "embedding", "vec_id"))
         val cVec = graft.ops.Caches.persistTracked(corpus.select(col("vec_id"),
           col("embedding").cast("array<double>").as("cv")))
-        val qStream = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, topicSize(topic) / 3).toString)
-          .load()
-          .select(from_json(col("value").cast("string"), org.apache.spark.sql.types
-            .StructType.fromDDL("q_id BIGINT, qv ARRAY<DOUBLE>")).as("j"))
-          .select(col("j.q_id").as("q_id"), col("j.qv").as("qv"))
-        val qBands = qStream
+        val qBands = readTopic(s, topic, "q_id BIGINT, qv ARRAY<DOUBLE>", Some(n => n / 3))
           .select(col("q_id"), col("qv"), posexplode(
             graft.functions.VectorExpressions.rhpBandsNative(col("qv"), 16, 8, 64)))
           .select(col("q_id"), col("qv"),
@@ -626,15 +595,9 @@ object StreamGate {
           .agg(slice(sort_array(array_distinct(collect_list(
             struct(col("cos_sim"), (-col("vec_id")).as("nid")))), asc = false),
             1, 5).as("top"))
-        val ckpt = gateTmpDir("s08_ckpt_")
-        val q = agg.writeStream.format("memory").queryName(mem)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s08 must serve queries across batches; ran ${dataBatches(q)} data batches")
+        runToEnd("s08", agg.writeStream.format("memory").queryName(mem)
+          .outputMode("complete"))(n =>
+          s"s08 must serve queries across batches; ran $n data batches")
         materialized(s, mem, s.table(mem)
           .select(col("q_id"), posexplode(col("top")))
           .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
@@ -657,16 +620,9 @@ object StreamGate {
       withGateConf(s) {
         val corpus = Tables.documents(s, dir).filter(col("doc_id") < 400)
         val sink = gateTmpDir("s09_sink_")
-        val ckpt = gateTmpDir("s09_ckpt_")
-        val stream = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, topicSize(topic) / 2).toString)
-          .load()
-          .select(from_json(col("value").cast("string"), org.apache.spark.sql.types
-            .StructType.fromDDL("doc_id BIGINT, text STRING, lang STRING")).as("j"))
-          .select(col("j.doc_id").as("doc_id"), col("j.text").as("text"),
-            col("j.lang").as("lang"))
-        val q = stream.writeStream
+        val stream = readTopic(s, topic, incomingDocsDdl, Some(n => n / 2))
+          .select("doc_id", "text", "lang")
+        runToEnd("s09", stream.writeStream
           .foreachBatch { (df: DataFrame, _: Long) =>
             // the micro-batch df belongs to a CLONED session whose temp
             // function registry starts empty, and the screening plan mixes
@@ -680,13 +636,7 @@ object StreamGate {
                 corpus, df, "doc_id", "text", "lang")
               .write.mode("append").parquet(sink.toString)
             ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s09 must screen across batches; ran ${dataBatches(q)} data batches")
+          })(n => s"s09 must screen across batches; ran $n data batches")
         val out = graft.ops.Caches.localCheckpointTracked(
           s.read.parquet(sink.toString).orderBy("doc_id"))
         cleanupStep("sink delete")(graft.util.Fs.deleteTree(sink))
@@ -709,26 +659,14 @@ object StreamGate {
       val topic = incomingDocsTopic(s, dir)
       withGateConf(s) {
         val sink = gateTmpDir("s10_sink_")
-        val ckpt = gateTmpDir("s10_ckpt_")
-        val stream = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, topicSize(topic) / 2).toString)
-          .load()
-          .select(from_json(col("value").cast("string"), org.apache.spark.sql.types
-            .StructType.fromDDL("doc_id BIGINT, text STRING, lang STRING")).as("j"))
-          .select(col("j.doc_id").as("doc_id"), col("j.text").as("text"))
-        val q = stream.writeStream
+        val stream = readTopic(s, topic, incomingDocsDdl, Some(n => n / 2))
+          .select("doc_id", "text")
+        runToEnd("s10", stream.writeStream
           .foreachBatch { (df: DataFrame, _: Long) =>
             df.withColumn("shard", graft.ops.Export.shardOf(col("doc_id"), 8))
               .write.mode("append").partitionBy("shard").parquet(sink.toString)
             ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s10 must export across batches; ran ${dataBatches(q)} data batches")
+          })(n => s"s10 must export across batches; ran $n data batches")
         // placement audit (ADVICE r8): the manifest recomputes shard from
         // doc_id, so a row landed in the WRONG shard=N/ directory would
         // still hash-pass — assert the directory-derived partition column
@@ -761,8 +699,7 @@ object StreamGate {
     // and which batch carried an arrival cannot show (the s09 argument).
     "s11_stream_delta_ann_serving" -> { (s, dir) =>
       val topic = arrivalVecTopic(s, dir)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val mem = s"s11_result_$run"
+      val mem = s"s11_result_${java.util.UUID.randomUUID().toString.take(8)}"
       withGateConf(s) {
         import org.apache.spark.sql.expressions.Window
         val all = Tables.embeddings(s, dir)
@@ -777,16 +714,9 @@ object StreamGate {
         val qVec = graft.ops.Caches.persistTracked(queries.select(
           col("vec_id").as("q_id"),
           col("embedding").cast("array<double>").as("qv")))
-        val aStream = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, topicSize(topic) / 3).toString)
-          .load()
-          .select(from_json(col("value").cast("string"), org.apache.spark.sql.types
-            .StructType.fromDDL("vec_id BIGINT, v ARRAY<DOUBLE>")).as("j"))
-          .select(col("j.vec_id").as("vec_id"), col("j.v").as("av"))
-        val aBands = aStream
-          .select(col("vec_id"), col("av"), posexplode(
-            graft.functions.VectorExpressions.rhpBandsNative(col("av"), 16, 8, 64)))
+        val aBands = readTopic(s, topic, vectorDdl, Some(n => n / 3))
+          .select(col("vec_id"), col("v").as("av"), posexplode(
+            graft.functions.VectorExpressions.rhpBandsNative(col("v"), 16, 8, 64)))
           .select(col("vec_id"), col("av"),
             (col("pos").cast("long") * 256L + col("col")).as("band_key"))
         val agg = aBands
@@ -798,15 +728,9 @@ object StreamGate {
           .agg(slice(sort_array(array_distinct(collect_list(
             struct(col("cos_sim"), (-col("vec_id")).as("nid")))), asc = false),
             1, 5).as("top"))
-        val ckpt = gateTmpDir("s11_ckpt_")
-        val q = agg.writeStream.format("memory").queryName(mem)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s11 must index arrivals across batches; ran ${dataBatches(q)} data batches")
+        runToEnd("s11", agg.writeStream.format("memory").queryName(mem)
+          .outputMode("complete"))(n =>
+          s"s11 must index arrivals across batches; ran $n data batches")
         val deltaTop = s.table(mem)
           .select(col("q_id"), posexplode(col("top")))
           .select(col("q_id"), (-col("col.nid")).as("vec_id"),
@@ -849,27 +773,12 @@ object StreamGate {
           .select("vec_id", "centroid_id", "codes")
           .write.mode("overwrite").partitionBy("centroid_id")
           .parquet(tree.toString)
-        val ckpt = gateTmpDir("s12_ckpt_")
-        val stream = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, topicSize(topic) / 3).toString)
-          .load()
-          .select(from_json(col("value").cast("string"), org.apache.spark.sql.types
-            .StructType.fromDDL("vec_id BIGINT, v ARRAY<DOUBLE>")).as("j"))
-          .select(col("j.vec_id").as("vec_id"), col("j.v").as("embedding"))
-        val q = stream.writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            if (!df.isEmpty)
-              graft.ops.Similarity.ivfPqCompact(tree.toString, cents, df,
-                "embedding", "vec_id", cb)
-            ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s12 must compact across batches; ran ${dataBatches(q)} data batches")
+        val stream = readTopic(s, topic, vectorDdl, Some(n => n / 3))
+          .select(col("vec_id"), col("v").as("embedding"))
+        runToEnd("s12", eachBatch(stream) { (df, _) =>
+          graft.ops.Similarity.ivfPqCompact(tree.toString, cents, df,
+            "embedding", "vec_id", cb)
+        })(n => s"s12 must compact across batches; ran $n data batches")
         val qv = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
           .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
         val out = graft.ops.Caches.localCheckpointTracked(
@@ -904,27 +813,12 @@ object StreamGate {
         graft.ops.Retrieval.bm25WriteModel(graft.ops.Retrieval
           .bm25BuildModel(docs.filter(col("doc_id") < 400), "doc_id",
             "text"), tree.toString, nBuckets = 16)
-        val ckpt = gateTmpDir("s13_ckpt_")
-        val stream = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, (topicSize(topic) + 1) / 2).toString)
-          .load()
-          .select(from_json(col("value").cast("string"), org.apache.spark.sql.types
-            .StructType.fromDDL("doc_id BIGINT, text STRING, lang STRING")).as("j"))
-          .select(col("j.doc_id").as("doc_id"), col("j.text").as("text"))
-        val q = stream.writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            if (!df.isEmpty)
-              graft.ops.Retrieval.bm25Compact(s, tree.toString, df,
-                "doc_id", "text", nBuckets = 16)
-            ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s13 must compact across batches; ran ${dataBatches(q)} data batches")
+        val stream = readTopic(s, topic, incomingDocsDdl, Some(n => (n + 1) / 2))
+          .select("doc_id", "text")
+        runToEnd("s13", eachBatch(stream) { (df, _) =>
+          graft.ops.Retrieval.bm25Compact(s, tree.toString, df,
+            "doc_id", "text", nBuckets = 16)
+        })(n => s"s13 must compact across batches; ran $n data batches")
         val qs = Seq(
           (1L, Seq("hash", "join")),
           (2L, Seq("spark", "vector")),
@@ -975,34 +869,15 @@ object StreamGate {
           .write.mode("overwrite").partitionBy("centroid_id")
           .parquet(annTree.toString)
         def maintain(topic: String, ddl: String, prep: DataFrame => DataFrame,
-                     fold: DataFrame => Unit, what: String): Unit = {
-          val ckpt = gateTmpDir(s"s14_ckpt_${what}_")
-          val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 1) / 2).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(ddl)).as("j"))
-            .transform(prep)
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) fold(df)
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s14 must compact $what across batches; ran ${dataBatches(q)}")
-        }
-        maintain(dTopic, "doc_id BIGINT, text STRING, lang STRING",
-          _.select(col("j.doc_id").as("doc_id"), col("j.text").as("text")),
+                     fold: DataFrame => Unit, what: String): Unit =
+          runToEnd(s"s14_$what", eachBatch(
+              readTopic(s, topic, ddl, Some(n => (n + 1) / 2)).transform(prep)) {
+            (df, _) => fold(df)
+          })(n => s"s14 must compact $what across batches; ran $n")
+        maintain(dTopic, incomingDocsDdl, _.select("doc_id", "text"),
           df => graft.ops.Retrieval.bm25Compact(s, bm25Tree.toString, df,
             "doc_id", "text", nBuckets = 16), "bm25")
-        maintain(vTopic, "vec_id BIGINT, v ARRAY<DOUBLE>",
-          _.select(col("j.vec_id").as("vec_id"), col("j.v").as("embedding")),
+        maintain(vTopic, vectorDdl, _.select(col("vec_id"), col("v").as("embedding")),
           df => { graft.ops.Similarity.ivfPqCompact(annTree.toString, cents,
             df, "embedding", "vec_id", cb); () }, "ann")
         val qdef = Seq(
@@ -1056,30 +931,14 @@ object StreamGate {
             cents, outDims = 16)
           .write.mode("overwrite").partitionBy("centroid_id")
           .parquet(tree.toString)
-        val ckpt = gateTmpDir("s15_ckpt_")
-        val q = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger",
-            math.max(1L, (topicSize(topic) + 1) / 2).toString)
-          .load()
-          .select(from_json(col("value").cast("string"), org.apache.spark.sql.types
-            .StructType.fromDDL("vec_id BIGINT, v ARRAY<DOUBLE>")).as("j"))
-          .select(col("j.vec_id").as("vec_id"), col("j.v").as("embedding"))
-          .writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            if (!df.isEmpty)
-              graft.ops.Similarity.assignProjected(df, "embedding",
-                  "vec_id", cents, outDims = 16)
-                .write.mode("append").partitionBy("centroid_id")
-                .parquet(tree.toString)
-            ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s15 must append across batches; ran ${dataBatches(q)} data batches")
+        val stream = readTopic(s, topic, vectorDdl, Some(n => (n + 1) / 2))
+          .select(col("vec_id"), col("v").as("embedding"))
+        runToEnd("s15", eachBatch(stream) { (df, _) =>
+          graft.ops.Similarity.assignProjected(df, "embedding",
+              "vec_id", cents, outDims = 16)
+            .write.mode("append").partitionBy("centroid_id")
+            .parquet(tree.toString)
+        })(n => s"s15 must append across batches; ran $n data batches")
         val qv = emb.filter(col("vec_id") === 0)
           .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
         val qp = graft.ops.Similarity.randomProjectLocal(qv, 16)
@@ -1134,34 +993,16 @@ object StreamGate {
           .sortWithinPartitions(col("sb"), col("src_id"), col("rank"))
           .write.mode("overwrite").partitionBy("sb").parquet(tree.toString)
         var sofar = static0
-        val ckpt = gateTmpDir("s16_ckpt_")
-        val q = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger",
-            math.max(1L, (topicSize(topic) + 1) / 2).toString)
-          .load()
-          .select(from_json(col("value").cast("string"),
-            org.apache.spark.sql.types.StructType
-              .fromDDL("vec_id BIGINT, v ARRAY<DOUBLE>")).as("j"))
-          .select(col("j.vec_id").as("vec_id"), col("j.v").as("embedding"))
-          .writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            if (!df.isEmpty) {
-              val d = graft.ops.Caches.localCheckpointTracked(
-                df.select(col("vec_id"), col("embedding")))
-              graft.ops.Similarity.knnGraphCompact(s, tree.toString, sofar,
-                d, "embedding", "vec_id", k = 5, centsOpt = Some(cents))
-              sofar = graft.ops.Caches.localCheckpointTracked(
-                sofar.unionByName(d))
-            }
-            ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s16 must fold across batches; ran ${dataBatches(q)} data batches")
+        val stream = readTopic(s, topic, vectorDdl, Some(n => (n + 1) / 2))
+          .select(col("vec_id"), col("v").as("embedding"))
+        runToEnd("s16", eachBatch(stream) { (df, _) =>
+          val d = graft.ops.Caches.localCheckpointTracked(
+            df.select(col("vec_id"), col("embedding")))
+          graft.ops.Similarity.knnGraphCompact(s, tree.toString, sofar,
+            d, "embedding", "vec_id", k = 5, centsOpt = Some(cents))
+          sofar = graft.ops.Caches.localCheckpointTracked(
+            sofar.unionByName(d))
+        })(n => s"s16 must fold across batches; ran $n data batches")
         val out = graft.ops.Caches.localCheckpointTracked(
           s.read.parquet(tree.toString)
             .select(col("src_id"), col("nbr_id"), col("cos_sim"), col("rank"))
@@ -1199,16 +1040,9 @@ object StreamGate {
             m0.vocabSize)
         }
         val sink = gateTmpDir("s17_sink_")
-        val ckpt = gateTmpDir("s17_ckpt_")
-        val stream = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, topicSize(topic) / 2).toString)
-          .load()
-          .select(from_json(col("value").cast("string"), org.apache.spark.sql.types
-            .StructType.fromDDL("doc_id BIGINT, text STRING, lang STRING")).as("j"))
-          .select(col("j.doc_id").as("doc_id"), col("j.text").as("text"),
-            col("j.lang").as("lang"))
-        val q = stream.writeStream
+        val stream = readTopic(s, topic, incomingDocsDdl, Some(n => n / 2))
+          .select("doc_id", "text", "lang")
+        runToEnd("s17", stream.writeStream
           .foreachBatch { (df: DataFrame, _: Long) =>
             graft.ops.Classify.nbScore(df, "doc_id", "text", m)
               .join(df.select(col("doc_id"), col("lang").as("actual_label")),
@@ -1218,13 +1052,7 @@ object StreamGate {
                 (col("actual_label") === col("pred_label")).as("is_correct"))
               .write.mode("append").parquet(sink.toString)
             ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s17 must screen across batches; ran ${dataBatches(q)} data batches")
+          })(n => s"s17 must screen across batches; ran $n data batches")
         val out = graft.ops.Caches.localCheckpointTracked(
           s.read.parquet(sink.toString).orderBy("doc_id"))
         cleanupStep("sink delete")(graft.util.Fs.deleteTree(sink))
@@ -1255,49 +1083,20 @@ object StreamGate {
       withGateConf(s) {
         val stages = Seq("signup", "click", "purchase")
         val retainHours = 31 * 24
-        var h: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s18_ckpt_")
-        try {
-  val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(col("timestamp").as("ts"),
-              from_json(col("value").cast("string"),
-                org.apache.spark.sql.types.StructType.fromDDL(
-                  "user_id BIGINT, event_type STRING, value DOUBLE")).as("j"))
-            .select(col("j.user_id").as("user_id"), col("ts"),
-              col("j.event_type").as("event_type"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val next = graft.ops.Caches.localCheckpointScoped(
-                  if (h == null)
-                    graft.ops.EventAnalytics.funnelState(df, "user_id", "ts",
-                      "event_type", stages, retainHours)
-                  else
-                    graft.ops.EventAnalytics.funnelFold(h.df, df, "user_id",
-                      "ts", "event_type", stages, retainHours))
-                if (h != null) h.release()
-                h = next
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s18 must fold across batches; ran ${dataBatches(q)} data batches")
+        val h = new Fold
+        Fold.guard(h) {
+          val stream = readTopic(s, topic, eventsDdl, Some(n => (n + 2) / 3))
+            .select("user_id", "ts", "event_type")
+          runToEnd("s18", eachBatch(stream) { (df, _) =>
+            h.update(graft.ops.EventAnalytics.funnelState(df, "user_id", "ts",
+                "event_type", stages, retainHours))(
+              graft.ops.EventAnalytics.funnelFold(_, df, "user_id", "ts",
+                "event_type", stages, retainHours))
+          })(n => s"s18 must fold across batches; ran $n data batches")
           graft.ops.Caches.localCheckpointTracked(
-            graft.ops.EventAnalytics.funnelFromState(
-                graft.ops.Caches.adopt(h), "user_id", stages.size,
-                withinHours = 48)
+            graft.ops.EventAnalytics.funnelFromState(h.result(), "user_id",
+                stages.size, withinHours = 48)
               .orderBy("user_id"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable => if (h != null) h.release(); throw t
         }
       }
     },
@@ -1313,46 +1112,13 @@ object StreamGate {
     "s19_stream_retention_maintenance" -> { (s, dir) =>
       val topic = eventsTopic(s, dir)
       withGateConf(s) {
-        var h: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s19_ckpt_")
-        try {
-  val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(col("timestamp").as("ts"),
-              from_json(col("value").cast("string"),
-                org.apache.spark.sql.types.StructType.fromDDL(
-                  "user_id BIGINT, event_type STRING, value DOUBLE")).as("j"))
-            .select(col("j.user_id").as("user_id"), col("ts"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val next = graft.ops.Caches.localCheckpointScoped(
-                  if (h == null)
-                    graft.ops.EventAnalytics.retentionState(df, "user_id", "ts")
-                  else
-                    graft.ops.EventAnalytics.retentionFold(h.df, df, "user_id",
-                      "ts"))
-                if (h != null) h.release()
-                h = next
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s19 must fold across batches; ran ${dataBatches(q)} data batches")
+        val h = new Fold
+        Fold.guard(h) {
+          runToEnd("s19", activeDays(s, topic, h))(n =>
+            s"s19 must fold across batches; ran $n data batches")
           graft.ops.Caches.localCheckpointTracked(
-            graft.ops.EventAnalytics.retentionFromState(
-                graft.ops.Caches.adopt(h), "user_id")
+            graft.ops.EventAnalytics.retentionFromState(h.result(), "user_id")
               .orderBy("cohort_day", "offset_days"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable => if (h != null) h.release(); throw t
         }
       }
     },
@@ -1370,55 +1136,28 @@ object StreamGate {
     "s20_stream_scd2_maintenance" -> { (s, dir) =>
       val topic = docSnapshotsTopic(s, dir)
       withGateConf(s) {
-        var h: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s20_ckpt_")
-        try {
-  val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "doc_id BIGINT, version INT, text STRING")).as("j"))
-            .select(col("j.doc_id").as("doc_id"), col("j.version").as("version"),
-              col("j.text").as("text"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val batch = graft.ops.Caches.localCheckpointTracked(df)
-                // the version list is model-sized gate plumbing (≤4
-                // values): snapshot slices must fold in ascending order
-                val versions = batch.select("version").distinct()
-                  .collect().map(_.getInt(0)).sorted
-                versions.foreach { v =>
-                  val slice = batch.filter(col("version") === v)
-                  val cur =
-                    if (h != null) h.df
-                    else slice.select(col("doc_id"),
-                      col("version").as("valid_from"),
-                      col("version").as("valid_to"),
-                      lit(true).as("is_current"), col("text")).limit(0)
-                  val next = graft.ops.Caches.localCheckpointScoped(
-                    graft.ops.Scd.scd2Apply(cur, slice, "doc_id", "version",
-                      Seq("text")))
-                  if (h != null) h.release()
-                  h = next
-                }
-              }
-              ()
+        val h = new Fold
+        Fold.guard(h) {
+          val stream = readTopic(s, topic, "doc_id BIGINT, version INT, text STRING",
+              Some(n => (n + 2) / 3))
+            .select("doc_id", "version", "text")
+          runToEnd("s20", eachBatch(stream) { (df, _) =>
+            val batch = graft.ops.Caches.localCheckpointTracked(df)
+            // the version list is model-sized gate plumbing (≤4
+            // values): snapshot slices must fold in ascending order
+            val versions = batch.select("version").distinct()
+              .collect().map(_.getInt(0)).sorted
+            versions.foreach { v =>
+              val slice = batch.filter(col("version") === v)
+              val apply = (cur: DataFrame) =>
+                graft.ops.Scd.scd2Apply(cur, slice, "doc_id", "version", Seq("text"))
+              h.update(apply(slice.select(col("doc_id"),
+                col("version").as("valid_from"), col("version").as("valid_to"),
+                lit(true).as("is_current"), col("text")).limit(0)))(apply)
             }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s20 must fold across batches; ran ${dataBatches(q)} data batches")
+          })(n => s"s20 must fold across batches; ran $n data batches")
           graft.ops.Caches.localCheckpointTracked(
-            graft.ops.Caches.adopt(h).orderBy("doc_id", "valid_from"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable => if (h != null) h.release(); throw t
+            h.result().orderBy("doc_id", "valid_from"))
         }
       }
     },
@@ -1435,52 +1174,23 @@ object StreamGate {
     "s21_stream_anomaly_stats" -> { (s, dir) =>
       val topic = measurementsTopic(s, dir)
       withGateConf(s) {
-        var stats: graft.ops.Checkpointed = null
-        var seen: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s21_ckpt_")
-        try {
-  val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "event_id BIGINT, event_type STRING, value DOUBLE")).as("j"))
-            .select(col("j.event_id").as("event_id"),
-              col("j.event_type").as("event_type"), col("j.value").as("value"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val bStats = graft.ops.EventAnalytics.anomalyStats(df,
-                  "event_type", "value")
-                val nextStats = graft.ops.Caches.localCheckpointScoped(
-                  if (stats == null) bStats
-                  else graft.ops.EventAnalytics.anomalyStatsMerge(stats.df,
-                    bStats, "event_type"))
-                if (stats != null) stats.release()
-                stats = nextStats
-                val nextSeen = graft.ops.Caches.localCheckpointScoped(
-                  if (seen == null) df else seen.df.unionByName(df))
-                if (seen != null) seen.release()
-                seen = nextSeen
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s21 must fold across batches; ran ${dataBatches(q)} data batches")
+        val (stats, seen) = (new Fold, new Fold)
+        Fold.guard(stats, seen) {
+          val stream = readTopic(s, topic, "event_id BIGINT, event_type STRING, value DOUBLE",
+              Some(n => (n + 2) / 3))
+            .select("event_id", "event_type", "value")
+          runToEnd("s21", eachBatch(stream) { (df, _) =>
+            val bStats = graft.ops.EventAnalytics.anomalyStats(df,
+              "event_type", "value")
+            stats.update(bStats)(
+              graft.ops.EventAnalytics.anomalyStatsMerge(_, bStats, "event_type"))
+            seen.update(df)(_.unionByName(df))
+          })(n => s"s21 must fold across batches; ran $n data batches")
           graft.ops.Caches.localCheckpointTracked(
             graft.ops.EventAnalytics.anomalyScoresFromStats(
-                graft.ops.Caches.adopt(seen), graft.ops.Caches.adopt(stats),
+                seen.result(), stats.result(),
                 "event_type", "value", "event_id")
               .orderBy("event_id"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable => if (stats != null) stats.release(); if (seen != null) seen.release(); throw t
         }
       }
     },
@@ -1503,34 +1213,16 @@ object StreamGate {
         val b = graft.ops.Layout.zOrderWrite(
           li.filter(col("l_orderkey") % 5 =!= 0), "l_partkey", "l_suppkey",
           tree.toString, bits = 8, cellBits = 4)
-        val ckpt = gateTmpDir("s22_ckpt_")
         // two data batches: each compact pays a read+rewrite of its
         // touched cell dirs, so the admission cap sizes the gate at the
         // minimum multi-batch evidence (≥2 asserted below)
-        val q = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger",
-            math.max(1L, (topicSize(topic) + 1) / 2).toString)
-          .load()
-          .select(from_json(col("value").cast("string"),
-            org.apache.spark.sql.types.StructType.fromDDL(
-              "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT")).as("j"))
-          .select(col("j.l_orderkey").as("l_orderkey"),
-            col("j.l_partkey").as("l_partkey"),
-            col("j.l_suppkey").as("l_suppkey"))
-          .writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            if (!df.isEmpty)
-              graft.ops.Layout.zOrderCompact(s, tree.toString, df,
-                "l_partkey", "l_suppkey", b, bits = 8, cellBits = 4)
-            ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s22 must compact across batches; ran ${dataBatches(q)} data batches")
+        val stream = readTopic(s, topic,
+            "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT", Some(n => (n + 1) / 2))
+          .select("l_orderkey", "l_partkey", "l_suppkey")
+        runToEnd("s22", eachBatch(stream) { (df, _) =>
+          graft.ops.Layout.zOrderCompact(s, tree.toString, df,
+            "l_partkey", "l_suppkey", b, bits = 8, cellBits = 4)
+        })(n => s"s22 must compact across batches; ran $n data batches")
         val out = graft.ops.Caches.localCheckpointTracked(
           s.read.parquet(tree.toString)
             .groupBy(col("cell").cast("long").as("cell"))
@@ -1558,62 +1250,27 @@ object StreamGate {
     "s23_stream_markov_maintenance" -> { (s, dir) =>
       val topic = orderedTypedEventsTopic(s, dir)
       withGateConf(s) {
-        var pairs: graft.ops.Checkpointed = null
-        var frontier: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s23_ckpt_")
-        try {
-  val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(col("timestamp").as("ts"),
-              from_json(col("value").cast("string"),
-                org.apache.spark.sql.types.StructType.fromDDL(
-                  "user_id BIGINT, event_id BIGINT, event_type STRING")).as("j"))
-            .select(col("j.user_id").as("user_id"), col("ts"),
-              col("j.event_id").as("event_id"),
-              col("j.event_type").as("event_type"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val batch = graft.ops.Caches.localCheckpointScoped(df)
-                try {
-                  val fdf = if (frontier == null) null else frontier.df
-                  val bp = graft.ops.EventAnalytics.transitionBatchPairs(
-                    fdf, batch.df, "user_id", "ts", "event_type", "event_id")
-                  val nextPairs = graft.ops.Caches.localCheckpointScoped(
-                    if (pairs == null) bp
-                    else graft.ops.EventAnalytics.transitionPairsMerge(
-                      pairs.df, bp))
-                  if (pairs != null) pairs.release()
-                  pairs = nextPairs
-                  val nextFrontier = graft.ops.Caches.localCheckpointScoped(
-                    graft.ops.EventAnalytics.transitionNewFrontier(
-                      fdf, batch.df, "user_id", "ts", "event_type", "event_id"))
-                  if (frontier != null) frontier.release()
-                  frontier = nextFrontier
-                } finally batch.release()
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s23 must fold across batches; ran ${dataBatches(q)} data batches")
-          if (frontier != null) frontier.release(); frontier = null
+        val (pairs, frontier) = (new Fold, new Fold)
+        Fold.guard(pairs, frontier) {
+          val stream = readTopic(s, topic, "user_id BIGINT, event_id BIGINT, event_type STRING",
+              Some(n => (n + 2) / 3))
+            .select("user_id", "ts", "event_id", "event_type")
+          runToEnd("s23", eachBatch(stream) { (df, _) =>
+            val batch = graft.ops.Caches.localCheckpointScoped(df)
+            try {
+              val fdf = frontier.state
+              val bp = graft.ops.EventAnalytics.transitionBatchPairs(
+                fdf, batch.df, "user_id", "ts", "event_type", "event_id")
+              pairs.update(bp)(graft.ops.EventAnalytics.transitionPairsMerge(_, bp))
+              val nf = graft.ops.EventAnalytics.transitionNewFrontier(
+                fdf, batch.df, "user_id", "ts", "event_type", "event_id")
+              frontier.update(nf)(_ => nf)
+            } finally batch.release()
+          })(n => s"s23 must fold across batches; ran $n data batches")
+          frontier.release()
           graft.ops.Caches.localCheckpointTracked(
-            graft.ops.EventAnalytics.transitionFromPairs(
-                graft.ops.Caches.adopt(pairs))
+            graft.ops.EventAnalytics.transitionFromPairs(pairs.result())
               .orderBy("src_type", "dst_type"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable =>
-            if (pairs != null) pairs.release()
-            if (frontier != null) frontier.release()
-            throw t
         }
       }
     },
@@ -1628,46 +1285,14 @@ object StreamGate {
     "s24_stream_rolling_active" -> { (s, dir) =>
       val topic = eventsTopic(s, dir)
       withGateConf(s) {
-        var h: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s24_ckpt_")
-        try {
-  val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(col("timestamp").as("ts"),
-              from_json(col("value").cast("string"),
-                org.apache.spark.sql.types.StructType.fromDDL(
-                  "user_id BIGINT, event_type STRING, value DOUBLE")).as("j"))
-            .select(col("j.user_id").as("user_id"), col("ts"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val next = graft.ops.Caches.localCheckpointScoped(
-                  if (h == null)
-                    graft.ops.EventAnalytics.retentionState(df, "user_id", "ts")
-                  else
-                    graft.ops.EventAnalytics.retentionFold(h.df, df, "user_id",
-                      "ts"))
-                if (h != null) h.release()
-                h = next
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s24 must fold across batches; ran ${dataBatches(q)} data batches")
+        val h = new Fold
+        Fold.guard(h) {
+          runToEnd("s24", activeDays(s, topic, h))(n =>
+            s"s24 must fold across batches; ran $n data batches")
           graft.ops.Caches.localCheckpointTracked(
-            graft.ops.EventAnalytics.rollingActiveFromState(
-                graft.ops.Caches.adopt(h), "user_id", windowDays = 7)
+            graft.ops.EventAnalytics.rollingActiveFromState(h.result(), "user_id",
+                windowDays = 7)
               .orderBy("day"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable => if (h != null) h.release(); throw t
         }
       }
     },
@@ -1688,50 +1313,22 @@ object StreamGate {
       val topic = docsCatalogTopic(s, dir)
       val cols = Seq("doc_id", "lang", "source", "n_chars", "lang_dirty")
       withGateConf(s) {
-        var st: graft.ops.Checkpointed = null
-        var seen: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s26_ckpt_")
-        try {
-  val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT")).as("j"))
-            .select(col("j.doc_id").as("doc_id"), col("j.lang").as("lang"),
-              col("j.source").as("source"), col("j.n_chars").as("n_chars"),
-              when(col("j.doc_id") % 7 === 0, lit(null).cast("string"))
-                .otherwise(col("j.lang")).as("lang_dirty"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val bState = graft.ops.Profile.profileState(df, cols)
-                val nextSt = graft.ops.Caches.localCheckpointScoped(
-                  if (st == null) bState
-                  else graft.ops.Profile.profileMerge(st.df, bState, cols))
-                if (st != null) st.release()
-                st = nextSt
-                val nextSeen = graft.ops.Caches.localCheckpointScoped(
-                  if (seen == null) df else seen.df.unionByName(df))
-                if (seen != null) seen.release()
-                seen = nextSeen
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s26 must fold across batches; ran ${dataBatches(q)} data batches")
+        val (st, seen) = (new Fold, new Fold)
+        Fold.guard(st, seen) {
+          val stream = readTopic(s, topic, docsCatalogDdl, Some(n => (n + 2) / 3))
+            .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
+              when(col("doc_id") % 7 === 0, lit(null).cast("string"))
+                .otherwise(col("lang")).as("lang_dirty"))
+          runToEnd("s26", eachBatch(stream) { (df, _) =>
+            val bState = graft.ops.Profile.profileState(df, cols)
+            st.update(bState)(graft.ops.Profile.profileMerge(_, bState, cols))
+            seen.update(df)(_.unionByName(df))
+          })(n => s"s26 must fold across batches; ran $n data batches")
           val exact = graft.ops.Caches.localCheckpointTracked(
-            graft.ops.Profile.profile(graft.ops.Caches.adopt(seen), cols)
+            graft.ops.Profile.profile(seen.result(), cols)
               .orderBy("col_name"))
           // value-pin the maintained HLL state against the exact twin
-          val approx = graft.ops.Profile.profileFromState(
-              graft.ops.Caches.adopt(st), cols)
+          val approx = graft.ops.Profile.profileFromState(st.result(), cols)
             .collect().map(r => r.getString(0) -> r).toMap
           exact.collect().foreach { e =>
             val a = approx(e.getString(0))
@@ -1744,12 +1341,6 @@ object StreamGate {
               s"s26 HLL distinct outside bound: $a vs $e")
           }
           exact
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable =>
-            if (st != null) st.release()
-            if (seen != null) seen.release()
-            throw t
         }
       }
     },
@@ -1768,68 +1359,29 @@ object StreamGate {
     "s27_stream_packing_maintenance" -> { (s, dir) =>
       val topic = chunkStreamTopic(s, dir)
       withGateConf(s) {
-        var packs: graft.ops.Checkpointed = null
-        var state: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s27_ckpt_")
-        try {
-  val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "doc_id BIGINT, source STRING, chunk_idx INT, n_chunk_tokens INT")).as("j"))
-            .select(col("j.doc_id").as("doc_id"), col("j.source").as("source"),
-              col("j.chunk_idx").as("chunk_idx"),
-              col("j.n_chunk_tokens").as("n_chunk_tokens"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val batch = graft.ops.Caches.localCheckpointScoped(df)
-                try {
-                  val sdf = if (state == null) null else state.df
-                  val folded = graft.ops.Caches.localCheckpointScoped(
-                    graft.ops.Chunking.packChunksStrictFold(batch.df, "source",
-                      "n_chunk_tokens", 256, Seq("doc_id", "chunk_idx"), sdf))
-                  try {
-                    val bp = graft.ops.Chunking.packAssignments(folded.df)
-                      .groupBy("source", "pack_id")
-                      .agg(count(lit(1)).as("n_chunks"),
-                        sum(col("n_chunk_tokens")).cast("long").as("pack_tokens"))
-                    val nextPacks = graft.ops.Caches.localCheckpointScoped(
-                      if (packs == null) bp
-                      else packs.df.unionByName(bp).groupBy("source", "pack_id")
-                        .agg(sum(col("n_chunks")).cast("long").as("n_chunks"),
-                          sum(col("pack_tokens")).cast("long").as("pack_tokens")))
-                    if (packs != null) packs.release()
-                    packs = nextPacks
-                    val ns = graft.ops.Chunking.packFoldState(folded.df, "source")
-                    val nextState = graft.ops.Caches.localCheckpointScoped(
-                      if (state == null) ns
-                      else graft.ops.Chunking.packStateMerge(state.df, ns, "source"))
-                    if (state != null) state.release()
-                    state = nextState
-                  } finally folded.release()
-                } finally batch.release()
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s27 must fold across batches; ran ${dataBatches(q)} data batches")
-          if (state != null) state.release(); state = null
+        val (packs, state) = (new Fold, new Fold)
+        Fold.guard(packs, state) {
+          val stream = readTopic(s, topic, chunksDdl, Some(n => (n + 2) / 3))
+            .select("doc_id", "source", "chunk_idx", "n_chunk_tokens")
+          runToEnd("s27", eachBatch(stream) { (df, _) =>
+            val batch = graft.ops.Caches.localCheckpointScoped(df)
+            try {
+              val folded = graft.ops.Caches.localCheckpointScoped(
+                graft.ops.Chunking.packChunksStrictFold(batch.df, "source",
+                  "n_chunk_tokens", 256, Seq("doc_id", "chunk_idx"), state.state))
+              try {
+                val bp = packTotals(folded.df)
+                packs.update(bp)(_.unionByName(bp).groupBy("source", "pack_id")
+                  .agg(sum(col("n_chunks")).cast("long").as("n_chunks"),
+                    sum(col("pack_tokens")).cast("long").as("pack_tokens")))
+                val ns = graft.ops.Chunking.packFoldState(folded.df, "source")
+                state.update(ns)(graft.ops.Chunking.packStateMerge(_, ns, "source"))
+              } finally folded.release()
+            } finally batch.release()
+          })(n => s"s27 must fold across batches; ran $n data batches")
+          state.release()
           graft.ops.Caches.localCheckpointTracked(
-            graft.ops.Caches.adopt(packs).orderBy("source", "pack_id"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable =>
-            if (packs != null) packs.release()
-            if (state != null) state.release()
-            throw t
+            packs.result().orderBy("source", "pack_id"))
         }
       }
     },
@@ -1848,22 +1400,15 @@ object StreamGate {
     // on this bounded single-batch replay it evicts nothing.)
     "s02_stream_dedup" -> { (s, dir) =>
       val topic = eventsTopic(s, dir)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val mem = s"s02_result_$run"
+      val mem = s"s02_result_${java.util.UUID.randomUUID().toString.take(8)}"
       withGateConf(s) {
-        val docs = s.readStream.format("graft-topic")
-          .option("topic", topic).load() // no admission cap — see above
+        val docs = readTopic(s, topic) // no admission cap — see above
           .select(col("key").cast("string").cast("long").as("user_id"),
             col("timestamp").as("ts"))
         val deduped = Streams.dedupWithinWatermark(docs, "user_id", "ts", "1 day")
           .select("user_id")
-        val ckpt = gateTmpDir("s02_ckpt_")
-        val q = deduped.writeStream.format("memory").queryName(mem)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
+        val q = runToEnd("s02", deduped.writeStream.format("memory").queryName(mem)
+          .outputMode("append"), minBatches = 0)(_ => "")
         require(dataBatches(q) <= 1,
           s"s02 relies on the single-batch drain invariant; ran ${dataBatches(q)} data batches")
         materialized(s, mem, s.table(mem).orderBy("user_id"))
@@ -1881,29 +1426,15 @@ object StreamGate {
     // threshold, so tie order is irrelevant).
     "s04_stream_session_windows" -> { (s, dir) =>
       val topic = eventsTopic(s, dir)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val mem = s"s04_result_$run"
+      val mem = s"s04_result_${java.util.UUID.randomUUID().toString.take(8)}"
       withGateConf(s) {
-        val parsed = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, topicSize(topic) / 6).toString)
-          .load()
-          .select(col("timestamp").as("ts"),
-            from_json(col("value").cast("string"), org.apache.spark.sql.types
-              .StructType.fromDDL("event_type STRING, value DOUBLE")).as("j"))
-          .select(col("ts"), col("j.event_type").as("event_type"),
-            col("j.value").as("value"))
+        val parsed = readTopic(s, topic, eventsDdl, Some(n => n / 6))
+          .select("ts", "event_type", "value")
         val agg = Streams.sessionCounts(parsed, "ts",
           watermark = replayWatermark, gap = "1 hour")
-        val ckpt = gateTmpDir("s04_ckpt_")
-        val q = agg.writeStream.format("memory").queryName(mem)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s04 must exercise cross-batch session merge; ran ${dataBatches(q)} data batches")
+        runToEnd("s04", agg.writeStream.format("memory").queryName(mem)
+          .outputMode("complete"))(n =>
+          s"s04 must exercise cross-batch session merge; ran $n data batches")
         materialized(s, mem, s.table(mem).orderBy("event_type", "win_start"))
       }
     },
@@ -1917,14 +1448,9 @@ object StreamGate {
     // same reproduction of the lookup (a user exists iff 0 <= id < 100).
     "s03_stream_enrich" -> { (s, dir) =>
       val topic = eventsTopic(s, dir)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val mem = s"s03_result_$run"
+      val mem = s"s03_result_${java.util.UUID.randomUUID().toString.take(8)}"
       withGateConf(s) {
-        val stream = s.readStream.format("graft-topic")
-          .option("topic", topic).load()
-          .select(from_json(col("value").cast("string"), org.apache.spark.sql
-            .types.StructType.fromDDL("user_id BIGINT, value DOUBLE")).as("j"))
-          .select(col("j.user_id").as("user_id"), col("j.value").as("value"))
+        val stream = readTopic(s, topic, eventsDdl).select("user_id", "value")
         val users = s.read.format("http-full-cache")
           .schema("id INT, name STRING, username STRING, email STRING")
           .option("url", HttpEnrichment.usersServer.url)
@@ -1934,13 +1460,8 @@ object StreamGate {
           .groupBy("user_id", "name")
           .agg(count(lit(1)).as("n_events"),
             Tables.dsum(col("value")).as("sum_value"))
-        val ckpt = gateTmpDir("s03_ckpt_")
-        val q = agg.writeStream.format("memory").queryName(mem)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
+        runToEnd("s03", agg.writeStream.format("memory").queryName(mem)
+          .outputMode("complete"), minBatches = 0)(_ => "")
         materialized(s, mem, s.table(mem).orderBy("user_id"))
       }
     },
@@ -1957,84 +1478,15 @@ object StreamGate {
     // oracle hash.
     "s05_stream_checkpoint_resume" -> { (s, dir) =>
       val topic = eventsTopic(s, dir)
-      val total = topicSize(topic)
       val out = gateTmpDir("s05_out_")
-      val ckpt = gateTmpDir("s05_ckpt_")
       withGateConf(s) {
-        def startLeg(): StreamingQuery =
-          s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger", math.max(1L, total / 12).toString)
-            .load()
+        killAndResume(s, "s05", () =>
+          readTopic(s, topic, eventsDdl, Some(n => n / 12))
             .select(col("key").cast("string").cast("long").as("user_id"),
-              from_json(col("value").cast("string"), org.apache.spark.sql.types
-                .StructType.fromDDL("event_type STRING, value DOUBLE")).as("j"))
-            .select(col("user_id"), col("j.event_type").as("event_type"),
-              col("j.value").as("value"))
+              col("event_type"), col("value"))
             .writeStream.format("parquet")
             .option("path", out.toString)
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-        // Leg 1: stop after ≥2 committed batches, well inside the backlog
-        // (~12 batches). The cut is signalled from the progress LISTENER
-        // (fires on batch commit), not a lastProgress poll — the listener
-        // latch makes the cut point deterministic at its source, so leg 1
-        // cannot race through the remaining backlog between a late poll
-        // and stop() on a fast fixture (ADVICE r6). Where exactly the cut
-        // lands past batch 2 doesn't matter — the oracle hash catches any
-        // replay/skip wherever it falls.
-        val cut = new java.util.concurrent.CountDownLatch(1)
-        // runId captured in onQueryStarted — Spark posts that event
-        // SYNCHRONOUSLY before start() returns, so leg1Run is assigned
-        // before the first trigger can possibly commit (no window in
-        // which a batch>=2 progress event could be dropped, ADVICE r7).
-        // Only leg 1 starts while this listener is registered (removed
-        // before leg 2; withGateConf enforces sequential gates), so the
-        // first-started guard can't latch onto a foreign query.
-        @volatile var leg1Run: java.util.UUID = null
-        val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit =
-            if (leg1Run == null) leg1Run = e.runId
-          override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-            if (e.progress.runId == leg1Run && e.progress.batchId >= 2) cut.countDown()
-          override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-            if (e.runId == leg1Run) cut.countDown() // failed/finished leg: don't hang
-        }
-        s.streams.addListener(listener)
-        val q1 = startLeg()
-        // belt-and-braces: onQueryStarted has already run (synchronous),
-        // but assert the contract rather than silently depend on it
-        require(leg1Run == q1.runId,
-          s"s05 listener captured runId $leg1Run but leg 1 is ${q1.runId}")
-        // The stop window's expected abort cascade (task aborted /
-        // failedToCommitStateFileError from the interrupted in-flight
-        // batch) is silenced — scoped to exactly this stop+drain, so a
-        // real state-store failure anywhere else still logs.
-        try {
-          if (!q1.isActive) cut.countDown() // terminated before runId was set
-          cut.await(120, java.util.concurrent.TimeUnit.SECONDS)
-        } finally {
-          try withQuietLoggers(interruptNoiseLoggers) {
-            cleanupStep("leg1 stop")(q1.stop())
-            // drain to full termination INSIDE the quiet window so the
-            // async abort cascade on executor threads is covered too; a
-            // stopped query returns normally, a genuinely failed one
-            // still throws out of here
-            q1.awaitTermination()
-          } finally cleanupStep("leg1 listener remove")(
-            s.streams.removeListener(listener))
-        }
-        if (sys.env.contains("SPARK_GRAFT_GATE_DEBUG")) dumpProgress(q1)
-        // Leg 2: resume from the checkpoint, drain to the end.
-        val q2 = startLeg()
-        drain(q2, ckpt)
-        require(dataBatches(q2) >= 1,
-          "s05 resume leg processed nothing — leg 1 drained the whole backlog")
+            .outputMode("append"))
         // The output dir outlives the query (read lazily below); /tmp is
         // round-scoped. The aggregate proves exactly-once: a lost or
         // doubled record anywhere shifts n/sum_value.
@@ -2058,56 +1510,15 @@ object StreamGate {
     // over the drained output topic; oracle = s05's SQL verbatim.
     "s25_stream_txn_topic_sink" -> { (s, dir) =>
       val topic = eventsTopic(s, dir)
-      val total = topicSize(topic)
       val outTopic = s"s25_out_${java.util.UUID.randomUUID().toString.take(8)}"
-      val ckpt = gateTmpDir("s25_ckpt_")
       withGateConf(s) {
         try {
-          def startLeg(): StreamingQuery =
-            s.readStream.format("graft-topic")
-              .option("topic", topic)
-              .option("maxRecordsPerTrigger", math.max(1L, total / 12).toString)
-              .load()
+          killAndResume(s, "s25", () =>
+            readTopic(s, topic, perTrigger = Some(n => n / 12))
               .select(col("key"), col("value"), col("timestamp"))
               .writeStream.format("graft-topic")
               .option("topic", outTopic)
-              .option("partitions", "4")
-              .option("checkpointLocation", ckpt.toString)
-              .trigger(Trigger.AvailableNow())
-              .start()
-          // the s05 listener-latch cut: stop after >= 2 committed batches,
-          // well inside the ~12-batch backlog
-          val cut = new java.util.concurrent.CountDownLatch(1)
-          @volatile var leg1Run: java.util.UUID = null
-          val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-            override def onQueryStarted(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit =
-              if (leg1Run == null) leg1Run = e.runId
-            override def onQueryProgress(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-              if (e.progress.runId == leg1Run && e.progress.batchId >= 2) cut.countDown()
-            override def onQueryTerminated(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-              if (e.runId == leg1Run) cut.countDown()
-          }
-          s.streams.addListener(listener)
-          val q1 = startLeg()
-          require(leg1Run == q1.runId,
-            s"s25 listener captured runId $leg1Run but leg 1 is ${q1.runId}")
-          try {
-            if (!q1.isActive) cut.countDown()
-            cut.await(120, java.util.concurrent.TimeUnit.SECONDS)
-          } finally {
-            try withQuietLoggers(interruptNoiseLoggers) {
-              cleanupStep("leg1 stop")(q1.stop())
-              q1.awaitTermination()
-            } finally cleanupStep("leg1 listener remove")(
-              s.streams.removeListener(listener))
-          }
-          val q2 = startLeg()
-          drain(q2, ckpt)
-          require(dataBatches(q2) >= 1,
-            "s25 resume leg processed nothing — leg 1 drained the whole backlog")
+              .option("partitions", "4"))
           graft.ops.Caches.localCheckpointTracked(
             s.read.format("graft-topic").option("topic", outTopic).load()
               .select(col("key").cast("string").cast("long").as("user_id"),
@@ -2141,9 +1552,7 @@ object StreamGate {
     // packs (production appends + compacts like the s11–s16 index folds).
     "s28_stream_packing_restart" -> { (s, dir) =>
       val topic = chunkStreamTopic(s, dir)
-      val total = topicSize(topic)
       val root = gateTmpDir("s28_state_")
-      val ckpt = gateTmpDir("s28_ckpt_")
       withGateConf(s) {
         val stateRoot = s"$root/state"
         val packsRoot = s"$root/packs"
@@ -2154,86 +1563,35 @@ object StreamGate {
             .map(_.stripPrefix("batch=").toLong).filter(_ < b)
           if (dirs.isEmpty) None else Some(s"$stateRoot/batch=${dirs.max}")
         }
-        def startLeg(): StreamingQuery =
-          s.readStream.format("graft-topic")
-            .option("topic", topic)
+        killAndResume(s, "s28", () => eachBatch(
             // ~12-batch backlog — DELIBERATELY not trimmed (r16 gate-dial
             // audit): the backlog is the RUNWAY for the kill-resume race —
             // leg 1's stop lands asynchronously after the ≥3-committed
             // latch, and a short backlog lets leg 1 drain everything
             // before the stop, starving leg 2's ≥1-data-batch assert; the
             // extra folds are the price of a non-flaky resume leg
-            .option("maxRecordsPerTrigger", math.max(1L, total / 12).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "doc_id BIGINT, source STRING, chunk_idx INT, n_chunk_tokens INT")).as("j"))
-            .select(col("j.doc_id").as("doc_id"), col("j.source").as("source"),
-              col("j.chunk_idx").as("chunk_idx"),
-              col("j.n_chunk_tokens").as("n_chunk_tokens"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, batchId: Long) =>
-              if (!df.isEmpty) {
-                val batch = graft.ops.Caches.localCheckpointScoped(df)
-                try {
-                  val prior = latestStateBefore(batchId)
-                    .map(p => s.read.parquet(p)).orNull
-                  val folded = graft.ops.Caches.localCheckpointScoped(
-                    graft.ops.Chunking.packChunksStrictFold(batch.df, "source",
-                      "n_chunk_tokens", 256, Seq("doc_id", "chunk_idx"), prior))
-                  try {
-                    graft.ops.Chunking.packAssignments(folded.df)
-                      .groupBy("source", "pack_id")
-                      .agg(count(lit(1)).as("n_chunks"),
-                        sum(col("n_chunk_tokens")).cast("long").as("pack_tokens"))
-                      .write.mode("overwrite")
-                      .parquet(s"$packsRoot/batch=$batchId")
-                    val ns = graft.ops.Chunking.packFoldState(folded.df, "source")
-                    (if (prior == null) ns
-                     else graft.ops.Chunking.packStateMerge(prior, ns, "source"))
-                      .write.mode("overwrite")
-                      .parquet(s"$stateRoot/batch=$batchId")
-                  } finally folded.release()
-                } finally batch.release()
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-        // the s05 listener-latch cut: stop after >= 2 committed batches,
-        // well inside the ~12-batch backlog
-        val cut = new java.util.concurrent.CountDownLatch(1)
-        @volatile var leg1Run: java.util.UUID = null
-        val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit =
-            if (leg1Run == null) leg1Run = e.runId
-          override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-            if (e.progress.runId == leg1Run && e.progress.batchId >= 2) cut.countDown()
-          override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-            if (e.runId == leg1Run) cut.countDown()
-        }
-        s.streams.addListener(listener)
-        val q1 = startLeg()
-        require(leg1Run == q1.runId,
-          s"s28 listener captured runId $leg1Run but leg 1 is ${q1.runId}")
-        try {
-          if (!q1.isActive) cut.countDown()
-          cut.await(120, java.util.concurrent.TimeUnit.SECONDS)
-        } finally {
-          try withQuietLoggers(interruptNoiseLoggers) {
-            cleanupStep("leg1 stop")(q1.stop())
-            q1.awaitTermination()
-          } finally cleanupStep("leg1 listener remove")(
-            s.streams.removeListener(listener))
-        }
-        val q2 = startLeg()
-        drain(q2, ckpt)
-        require(dataBatches(q2) >= 1,
-          "s28 resume leg processed nothing — leg 1 drained the whole backlog")
+            readTopic(s, topic, chunksDdl, Some(n => n / 12))
+              .select("doc_id", "source", "chunk_idx", "n_chunk_tokens")) {
+          (df, batchId) =>
+            val batch = graft.ops.Caches.localCheckpointScoped(df)
+            try {
+              val prior = latestStateBefore(batchId)
+                .map(p => s.read.parquet(p)).orNull
+              val folded = graft.ops.Caches.localCheckpointScoped(
+                graft.ops.Chunking.packChunksStrictFold(batch.df, "source",
+                  "n_chunk_tokens", 256, Seq("doc_id", "chunk_idx"), prior))
+              try {
+                packTotals(folded.df)
+                  .write.mode("overwrite")
+                  .parquet(s"$packsRoot/batch=$batchId")
+                val ns = graft.ops.Chunking.packFoldState(folded.df, "source")
+                (if (prior == null) ns
+                 else graft.ops.Chunking.packStateMerge(prior, ns, "source"))
+                  .write.mode("overwrite")
+                  .parquet(s"$stateRoot/batch=$batchId")
+              } finally folded.release()
+            } finally batch.release()
+        })
         graft.ops.Caches.localCheckpointTracked(
           s.read.parquet(packsRoot)
             .groupBy("source", "pack_id")
@@ -2256,45 +1614,22 @@ object StreamGate {
     "s29_stream_decontamination" -> { (s, dir) =>
       val topic = benchDocsTopic(s, dir)
       withGateConf(s) {
-        var rep: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s29_ckpt_")
+        val rep = new Fold
         val cs = graft.ops.Caches.persistTracked(
           graft.ops.Dedup.contaminationShingles(
             Tables.documents(s, dir).select("doc_id", "text"),
             "doc_id", "text", ngramN = 5))
-        try {
-  val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "bench_id BIGINT, text STRING")).as("j"))
-            .select(col("j.bench_id").as("bench_id"), col("j.text").as("text"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val br = graft.ops.Dedup.contaminationReportFromShingles(
-                  cs, df, "bench_id", "text", ngramN = 5, minShared = 2)
-                val next = graft.ops.Caches.localCheckpointScoped(
-                  if (rep == null) br else rep.df.unionByName(br))
-                if (rep != null) rep.release()
-                rep = next
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s29 must fold across batches; ran ${dataBatches(q)} data batches")
+        Fold.guard(rep) {
+          val stream = readTopic(s, topic, "bench_id BIGINT, text STRING",
+              Some(n => (n + 2) / 3))
+            .select("bench_id", "text")
+          runToEnd("s29", eachBatch(stream) { (df, _) =>
+            val br = graft.ops.Dedup.contaminationReportFromShingles(
+              cs, df, "bench_id", "text", ngramN = 5, minShared = 2)
+            rep.update(br)(_.unionByName(br))
+          })(n => s"s29 must fold across batches; ran $n data batches")
           graft.ops.Caches.localCheckpointTracked(
-            graft.ops.Caches.adopt(rep).orderBy("doc_id", "bench_id"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable => if (rep != null) rep.release(); throw t
+            rep.result().orderBy("doc_id", "bench_id"))
         }
       }
     },
@@ -2315,44 +1650,17 @@ object StreamGate {
       val topic = docsCatalogTopic(s, dir)
       val weights = Map("en" -> 500, "zh" -> 200, "de" -> 150, "fr" -> 150)
       withGateConf(s) {
-        var st: graft.ops.Checkpointed = null
-        var seen: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s30_ckpt_")
-        try {
-  val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT")).as("j"))
-            .select(col("j.doc_id").as("doc_id"), col("j.lang").as("lang"),
-              col("j.n_chars").as("n_chars"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val bs = graft.ops.Chunking.mixtureStats(df, "lang", "n_chars")
-                val nextSt = graft.ops.Caches.localCheckpointScoped(
-                  if (st == null) bs
-                  else graft.ops.Chunking.mixtureStatsMerge(st.df, bs, "lang"))
-                if (st != null) st.release()
-                st = nextSt
-                val nextSeen = graft.ops.Caches.localCheckpointScoped(
-                  if (seen == null) df else seen.df.unionByName(df))
-                if (seen != null) seen.release()
-                seen = nextSeen
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s30 must fold across batches; ran ${dataBatches(q)} data batches")
-          val seenDf = graft.ops.Caches.adopt(seen)
-          val stDf = graft.ops.Caches.adopt(st)
+        val (st, seen) = (new Fold, new Fold)
+        Fold.guard(st, seen) {
+          val stream = readTopic(s, topic, docsCatalogDdl, Some(n => (n + 2) / 3))
+            .select("doc_id", "lang", "n_chars")
+          runToEnd("s30", eachBatch(stream) { (df, _) =>
+            val bs = graft.ops.Chunking.mixtureStats(df, "lang", "n_chars")
+            st.update(bs)(graft.ops.Chunking.mixtureStatsMerge(_, bs, "lang"))
+            seen.update(df)(_.unionByName(df))
+          })(n => s"s30 must fold across batches; ran $n data batches")
+          val seenDf = seen.result()
+          val stDf = st.result()
           // value-pin the folded stats against the exact twin over the
           // accumulated arrivals (integer sums: equality is exact)
           val folded = stDf.collect()
@@ -2375,12 +1683,6 @@ object StreamGate {
                 coalesce(sum(when(col("keep"), col("n_chars"))), lit(0L))
                   .cast("long").as("kept_tokens"))
               .orderBy("lang"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable =>
-            if (st != null) st.release()
-            if (seen != null) seen.release()
-            throw t
         }
       }
     },
@@ -2397,42 +1699,18 @@ object StreamGate {
     "s31_stream_cdc_digest" -> { (s, dir) =>
       val topic = allDocsTopic(s, dir)
       withGateConf(s) {
-        var digest: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s31_ckpt_")
-        try {
-          val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "doc_id BIGINT, text STRING")).as("j"))
-            .select(col("j.doc_id").as("doc_id"), col("j.text").as("text"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val bd = graft.ops.Chunking.contentDefinedChunks(
-                    df, "doc_id", "text", windowWords = 4, maskMod = 16)
-                  .select("doc_id", "chunk_idx", "n_chunk_tokens", "chunk_hash")
-                val next = graft.ops.Caches.localCheckpointScoped(
-                  if (digest == null) bd else digest.df.unionByName(bd))
-                if (digest != null) digest.release()
-                digest = next
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s31 must fold across batches; ran ${dataBatches(q)} data batches")
+        val digest = new Fold
+        Fold.guard(digest) {
+          val stream = readTopic(s, topic, allDocsDdl, Some(n => (n + 2) / 3))
+            .select("doc_id", "text")
+          runToEnd("s31", eachBatch(stream) { (df, _) =>
+            val bd = graft.ops.Chunking.contentDefinedChunks(
+                df, "doc_id", "text", windowWords = 4, maskMod = 16)
+              .select("doc_id", "chunk_idx", "n_chunk_tokens", "chunk_hash")
+            digest.update(bd)(_.unionByName(bd))
+          })(n => s"s31 must fold across batches; ran $n data batches")
           graft.ops.Caches.localCheckpointTracked(
-            graft.ops.Caches.adopt(digest).orderBy("doc_id", "chunk_idx"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable => if (digest != null) digest.release(); throw t
+            digest.result().orderBy("doc_id", "chunk_idx"))
         }
       }
     },
@@ -2452,44 +1730,22 @@ object StreamGate {
     "s32_stream_token_drift" -> { (s, dir) =>
       val topic = allDocsTopic(s, dir)
       withGateConf(s) {
-        var st: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s32_ckpt_")
-        try {
-          val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "doc_id BIGINT, text STRING")).as("j"))
-            .select(col("j.doc_id").as("doc_id"), col("j.text").as("text"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val sided = df.withColumn("side",
-                  when(col("doc_id") % 2 === 0, lit("a")).otherwise(lit("b")))
-                val bs = sided
-                  .select(col("side"),
-                    explode(split(col("text"), " ")).as("w"))
-                  .groupBy("side", "w")
-                  .agg(count(lit(1)).cast("long").as("c"))
-                val nextSt = graft.ops.Caches.localCheckpointScoped(
-                  if (st == null) bs
-                  else st.df.unionByName(bs).groupBy("side", "w")
-                    .agg(sum(col("c")).cast("long").as("c")))
-                if (st != null) st.release()
-                st = nextSt
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s32 must fold across batches; ran ${dataBatches(q)} data batches")
-          val stDf = graft.ops.Caches.adopt(st)
+        val st = new Fold
+        Fold.guard(st) {
+          val stream = readTopic(s, topic, allDocsDdl, Some(n => (n + 2) / 3))
+            .select("doc_id", "text")
+          runToEnd("s32", eachBatch(stream) { (df, _) =>
+            val sided = df.withColumn("side",
+              when(col("doc_id") % 2 === 0, lit("a")).otherwise(lit("b")))
+            val bs = sided
+              .select(col("side"),
+                explode(split(col("text"), " ")).as("w"))
+              .groupBy("side", "w")
+              .agg(count(lit(1)).cast("long").as("c"))
+            st.update(bs)(_.unionByName(bs).groupBy("side", "w")
+              .agg(sum(col("c")).cast("long").as("c")))
+          })(n => s"s32 must fold across batches; ran $n data batches")
+          val stDf = st.result()
           // value-pin the folded histograms against the exact twin over
           // the source table — the topic IS the whole documents table
           // drained with AvailableNow, so the arrival set equals it
@@ -2513,11 +1769,6 @@ object StreamGate {
               stDf.filter(col("side") === "a").select("w", "c"),
               stDf.filter(col("side") === "b").select("w", "c"),
               topK = 50))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable =>
-            if (st != null) st.release()
-            throw t
         }
       }
     },
@@ -2534,44 +1785,20 @@ object StreamGate {
     "s33_stream_winnowing_index" -> { (s, dir) =>
       val topic = allDocsTopic(s, dir)
       withGateConf(s) {
-        var idx: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s33_ckpt_")
-        try {
-          val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "doc_id BIGINT, text STRING")).as("j"))
-            .select(col("j.doc_id").as("doc_id"), col("j.text").as("text"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val bf = graft.ops.Dedup.winnowingFingerprints(
-                  df, "doc_id", "text", k = 4, w = 8)
-                val next = graft.ops.Caches.localCheckpointScoped(
-                  if (idx == null) bf else idx.df.unionByName(bf))
-                if (idx != null) idx.release()
-                idx = next
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s33 must fold across batches; ran ${dataBatches(q)} data batches")
+        val idx = new Fold
+        Fold.guard(idx) {
+          val stream = readTopic(s, topic, allDocsDdl, Some(n => (n + 2) / 3))
+            .select("doc_id", "text")
+          runToEnd("s33", eachBatch(stream) { (df, _) =>
+            val bf = graft.ops.Dedup.winnowingFingerprints(
+              df, "doc_id", "text", k = 4, w = 8)
+            idx.update(bf)(_.unionByName(bf))
+          })(n => s"s33 must fold across batches; ran $n data batches")
           graft.ops.Caches.localCheckpointTracked(
             graft.ops.Dedup.winnowingOverlapFromFingerprints(
-                graft.ops.Caches.adopt(idx), "doc_id",
+                idx.result(), "doc_id",
                 minShared = 3, maxFpDf = 50)
               .orderBy("a_id", "b_id"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable => if (idx != null) idx.release(); throw t
         }
       }
     },
@@ -2589,39 +1816,16 @@ object StreamGate {
     "s34_stream_tfidf_salience" -> { (s, dir) =>
       val topic = srcDocsTopic(s, dir)
       withGateConf(s) {
-        var st: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s34_ckpt_")
-        try {
-          val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "doc_id BIGINT, source STRING, text STRING")).as("j"))
-            .select(col("j.doc_id").as("doc_id"), col("j.source").as("source"),
-              col("j.text").as("text"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val bs = graft.ops.TextStats.tfidfStats(
-                  df, "doc_id", "source", "text")
-                val next = graft.ops.Caches.localCheckpointScoped(
-                  if (st == null) bs
-                  else graft.ops.TextStats.tfidfStatsMerge(st.df, bs))
-                if (st != null) st.release()
-                st = next
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s34 must fold across batches; ran ${dataBatches(q)} data batches")
-          val stDf = graft.ops.Caches.adopt(st)
+        val st = new Fold
+        Fold.guard(st) {
+          val stream = readTopic(s, topic, srcDocsDdl, Some(n => (n + 2) / 3))
+            .select("doc_id", "source", "text")
+          runToEnd("s34", eachBatch(stream) { (df, _) =>
+            val bs = graft.ops.TextStats.tfidfStats(
+              df, "doc_id", "source", "text")
+            st.update(bs)(graft.ops.TextStats.tfidfStatsMerge(_, bs))
+          })(n => s"s34 must fold across batches; ran $n data batches")
+          val stDf = st.result()
           // value-pin the folded stats against the exact twin over the
           // whole corpus (integer counts: equality is exact)
           val folded = stDf.collect()
@@ -2639,9 +1843,6 @@ object StreamGate {
             graft.ops.TextStats.tfidfSalienceFromStats(stDf, "source",
                 topK = 10)
               .orderBy("source", "rk"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable => if (st != null) st.release(); throw t
         }
       }
     },
@@ -2676,27 +1877,12 @@ object StreamGate {
           .select("vec_id", "centroid_id", "codes")
           .write.mode("overwrite").partitionBy("centroid_id")
           .parquet(tree.toString)
-        val ckpt = gateTmpDir("s35_ckpt_")
-        val stream = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, topicSize(topic) / 3).toString)
-          .load()
-          .select(from_json(col("value").cast("string"), org.apache.spark.sql.types
-            .StructType.fromDDL("vec_id BIGINT, v ARRAY<DOUBLE>")).as("j"))
-          .select(col("j.vec_id").as("vec_id"), col("j.v").as("embedding"))
-        val q = stream.writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            if (!df.isEmpty)
-              graft.ops.Similarity.ivfPqCompact(tree.toString, cents, df,
-                "embedding", "vec_id", cb)
-            ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s35 must compact across batches; ran ${dataBatches(q)} data batches")
+        val stream = readTopic(s, topic, vectorDdl, Some(n => n / 3))
+          .select(col("vec_id"), col("v").as("embedding"))
+        runToEnd("s35", eachBatch(stream) { (df, _) =>
+          graft.ops.Similarity.ivfPqCompact(tree.toString, cents, df,
+            "embedding", "vec_id", cb)
+        })(n => s"s35 must compact across batches; ran $n data batches")
         val served = graft.ops.Similarity.ivfPqServeAll(cents,
           s.read.parquet(tree.toString), corpus, "embedding", "vec_id",
           qtab, "vec_id", cb, k = 5)
@@ -2733,28 +1919,12 @@ object StreamGate {
           graft.ops.Dedup.winnowingFingerprints(
             docs.filter(col("doc_id") < 400), "doc_id", "text", k = 4, w = 8),
           "doc_id", tree.toString, nBuckets = 16)
-        val ckpt = gateTmpDir("s36_ckpt_")
-        val stream = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger",
-            math.max(1L, (topicSize(topic) + 1) / 2).toString)
-          .load()
-          .select(from_json(col("value").cast("string"), org.apache.spark.sql.types
-            .StructType.fromDDL("doc_id BIGINT, text STRING, lang STRING")).as("j"))
-          .select(col("j.doc_id").as("doc_id"), col("j.text").as("text"))
-        val q = stream.writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            if (!df.isEmpty)
-              graft.ops.Dedup.winnowingCompact(s, tree.toString, df,
-                "doc_id", "text", k = 4, w = 8, nBuckets = 16)
-            ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s36 must compact across batches; ran ${dataBatches(q)} data batches")
+        val stream = readTopic(s, topic, incomingDocsDdl, Some(n => (n + 1) / 2))
+          .select("doc_id", "text")
+        runToEnd("s36", eachBatch(stream) { (df, _) =>
+          graft.ops.Dedup.winnowingCompact(s, tree.toString, df,
+            "doc_id", "text", k = 4, w = 8, nBuckets = 16)
+        })(n => s"s36 must compact across batches; ran $n data batches")
         val out = graft.ops.Caches.localCheckpointTracked(
           graft.ops.Dedup.winnowingServeTree(s, tree.toString, "doc_id",
               minShared = 3, maxFpDf = 50)
@@ -2781,53 +1951,22 @@ object StreamGate {
     "s37_stream_lm_curriculum" -> { (s, dir) =>
       val topic = srcDocsTopic(s, dir)
       withGateConf(s) {
-        var bi: graft.ops.Checkpointed = null
-        var vw: graft.ops.Checkpointed = null
-        var dt: graft.ops.Checkpointed = null
-        val ckpt = gateTmpDir("s37_ckpt_")
-        try {
-          val q = s.readStream.format("graft-topic")
-            .option("topic", topic)
-            .option("maxRecordsPerTrigger",
-              math.max(1L, (topicSize(topic) + 2) / 3).toString)
-            .load()
-            .select(from_json(col("value").cast("string"),
-              org.apache.spark.sql.types.StructType.fromDDL(
-                "doc_id BIGINT, source STRING, text STRING")).as("j"))
-            .select(col("j.doc_id").as("doc_id"), col("j.text").as("text"))
-            .writeStream
-            .foreachBatch { (df: DataFrame, _: Long) =>
-              if (!df.isEmpty) {
-                val lm = graft.ops.LangModel
-                val nextBi = graft.ops.Caches.localCheckpointScoped(
-                  if (bi == null) lm.bigramStats(df, "doc_id", "text")
-                  else lm.bigramStatsMerge(bi.df,
-                    lm.bigramStats(df, "doc_id", "text")))
-                if (bi != null) bi.release()
-                bi = nextBi
-                val nextVw = graft.ops.Caches.localCheckpointScoped(
-                  if (vw == null) lm.vocabWords(df, "text")
-                  else vw.df.unionByName(lm.vocabWords(df, "text")).distinct())
-                if (vw != null) vw.release()
-                vw = nextVw
-                val nextDt = graft.ops.Caches.localCheckpointScoped(
-                  if (dt == null) lm.docTransitionStats(df, "doc_id", "text")
-                  else dt.df.unionByName(
-                    lm.docTransitionStats(df, "doc_id", "text")))
-                if (dt != null) dt.release()
-                dt = nextDt
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          drain(q, ckpt)
-          require(dataBatches(q) >= 2,
-            s"s37 must fold across batches; ran ${dataBatches(q)} data batches")
-          val biDf = graft.ops.Caches.adopt(bi)
-          val vwDf = graft.ops.Caches.adopt(vw)
-          val dtDf = graft.ops.Caches.adopt(dt)
+        val (bi, vw, dt) = (new Fold, new Fold, new Fold)
+        Fold.guard(bi, vw, dt) {
+          val stream = readTopic(s, topic, srcDocsDdl, Some(n => (n + 2) / 3))
+            .select("doc_id", "text")
+          runToEnd("s37", eachBatch(stream) { (df, _) =>
+            val lm = graft.ops.LangModel
+            val bb = lm.bigramStats(df, "doc_id", "text")
+            bi.update(bb)(lm.bigramStatsMerge(_, bb))
+            val bv = lm.vocabWords(df, "text")
+            vw.update(bv)(_.unionByName(bv).distinct())
+            val bt = lm.docTransitionStats(df, "doc_id", "text")
+            dt.update(bt)(_.unionByName(bt))
+          })(n => s"s37 must fold across batches; ran $n data batches")
+          val biDf = bi.result()
+          val vwDf = vw.result()
+          val dtDf = dt.result()
           val docs = Tables.documents(s, dir)
           // value-pin the folded MODEL states against the exact twins
           // (integer counts / a distinct set: equality is exact)
@@ -2850,17 +1989,27 @@ object StreamGate {
             graft.ops.Export.curriculumThresholdFromScored(scored,
                 Ext.curriculumCutDials)
               .orderBy("bucket"))
-        } catch {
-          // a failed drain/fold must not strand scoped blocks
-          case t: Throwable =>
-            if (bi != null) bi.release()
-            if (vw != null) vw.release()
-            if (dt != null) dt.release()
-            throw t
         }
       }
     },
   )
+
+  /** s19/s24's shared fold: the events stream folded into the distinct
+    * (user, activity-day) pair set. */
+  private def activeDays(s: SparkSession, topic: String, h: Fold): DataStreamWriter[Row] =
+    eachBatch(readTopic(s, topic, eventsDdl, Some(n => (n + 2) / 3)).select("user_id", "ts")) {
+      (df, _) =>
+        h.update(graft.ops.EventAnalytics.retentionState(df, "user_id", "ts"))(
+          graft.ops.EventAnalytics.retentionFold(_, df, "user_id", "ts"))
+    }
+
+  /** s27/s28's per-(source, pack_id) chunk and token totals of one
+    * packed batch. */
+  private def packTotals(packed: DataFrame): DataFrame =
+    graft.ops.Chunking.packAssignments(packed)
+      .groupBy("source", "pack_id")
+      .agg(count(lit(1)).as("n_chunks"),
+        sum(col("n_chunk_tokens")).cast("long").as("pack_tokens"))
 
   private val streamStreamEntry: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // STREAM-STREAM inner join under the gate: the capped events stream
@@ -2877,40 +2026,23 @@ object StreamGate {
     "s06_stream_stream_join" -> { (s, dir) =>
       val topic = eventsTopic(s, dir)
       val mTopic = userMetaTopic(s, dir)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val mem = s"s06_result_$run"
+      val mem = s"s06_result_${java.util.UUID.randomUUID().toString.take(8)}"
       withGateConf(s) {
-        val ev = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, topicSize(topic) / 3).toString)
-          .load()
-          .select(col("timestamp").as("ts"),
-            from_json(col("value").cast("string"), org.apache.spark.sql.types
-              .StructType.fromDDL("user_id BIGINT, value DOUBLE")).as("j"))
-          .select(col("ts"), col("j.user_id").as("user_id"), col("j.value").as("value"))
+        val ev = readTopic(s, topic, eventsDdl, Some(n => n / 3))
+          .select("ts", "user_id", "value")
           // deterministic 1-in-5 user subset: the join-state machinery is
           // what the gate exercises; 100k joined rows through the
           // symmetric-hash join + memory sink would only buy volume
           .filter(col("user_id") % 5 === 0)
           .withWatermark("ts", replayWatermark)
-        val meta = s.readStream.format("graft-topic")
-          .option("topic", mTopic).load()
-          .select(col("timestamp").as("m_ts"),
-            from_json(col("value").cast("string"), org.apache.spark.sql.types
-              .StructType.fromDDL("m_user_id BIGINT, tier STRING")).as("j"))
-          .select(col("m_ts"), col("j.m_user_id").as("m_user_id"), col("j.tier").as("tier"))
+        val meta = readTopic(s, mTopic, "m_user_id BIGINT, tier STRING")
+          .select(col("ts").as("m_ts"), col("m_user_id"), col("tier"))
           .withWatermark("m_ts", replayWatermark)
         val joined = ev.join(meta, ev("user_id") === meta("m_user_id"), "inner")
           .select("user_id", "tier", "value")
-        val ckpt = gateTmpDir("s06_ckpt_")
-        val q = joined.writeStream.format("memory").queryName(mem)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s06 must exercise cross-batch join state; ran ${dataBatches(q)} data batches")
+        runToEnd("s06", joined.writeStream.format("memory").queryName(mem)
+          .outputMode("append"))(n =>
+          s"s06 must exercise cross-batch join state; ran $n data batches")
         materialized(s, mem, s.table(mem)
           .groupBy("user_id", "tier")
           .agg(count(lit(1)).as("n"), Tables.dsum(col("value")).as("sum_value"))
@@ -2936,8 +2068,7 @@ object StreamGate {
     // bound comes from watermark + join-window instead of a clock.
     "s07_stream_join_eviction" -> { (s, dir) =>
       val topic = orderedEventsTopic(s, dir)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val mem = s"s07_result_$run"
+      val mem = s"s07_result_${java.util.UUID.randomUUID().toString.take(8)}"
       // r8 trim: 3 data batches (was 6) — the watermark advances ~10
       // days/trigger, so batch-1 join windows (c_ts+7d < day 15) still
       // evict DURING data batch 3, mid-drain as asserted; and 2 state
@@ -2946,15 +2077,8 @@ object StreamGate {
       // while staying multi-partition. Each saved batch saves a full
       // admission pass over BOTH sides plus 4-store commits.
       withGateConf(s, noData = true, partitions = 2) {
-        def side(): DataFrame = s.readStream.format("graft-topic")
-          .option("topic", topic)
-          .option("maxRecordsPerTrigger", math.max(1L, topicSize(topic) / 3).toString)
-          .load()
-          .select(col("timestamp").as("ts"),
-            from_json(col("value").cast("string"), org.apache.spark.sql.types
-              .StructType.fromDDL("user_id BIGINT, event_type STRING, value DOUBLE")).as("j"))
-          .select(col("ts"), col("j.user_id").as("user_id"),
-            col("j.event_type").as("event_type"), col("j.value").as("value"))
+        def side(): DataFrame = readTopic(s, topic, eventsDdl, Some(n => n / 3))
+          .select("ts", "user_id", "event_type", "value")
         // deterministic 1-in-5 user subset, same rationale as s06; the
         // sentinels pass it (−5 % 5 == −10 % 5 == 0)
         val clicks = side()
@@ -2970,15 +2094,8 @@ object StreamGate {
           expr("user_id = p_user_id AND p_ts >= c_ts AND p_ts <= c_ts + interval 7 days"),
           "leftOuter")
           .select(col("user_id"), col("c_ts"), col("p_ts"), col("p_value"))
-        val ckpt = gateTmpDir("s07_ckpt_")
-        val q = joined.writeStream.format("memory").queryName(mem)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        drain(q, ckpt)
-        require(dataBatches(q) >= 2,
-          s"s07 must drain multi-batch; ran ${dataBatches(q)} data batches")
+        val q = runToEnd("s07", joined.writeStream.format("memory").queryName(mem)
+          .outputMode("append"))(n => s"s07 must drain multi-batch; ran $n data batches")
         val removed = q.recentProgress
           .flatMap(_.stateOperators.map(_.numRowsRemoved)).sum
         require(removed > 0,

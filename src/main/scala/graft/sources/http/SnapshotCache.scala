@@ -32,19 +32,28 @@ import scala.collection.concurrent.TrieMap
   */
 object SnapshotCache extends Logging {
 
+  /** `bodyBytes` is the body's UTF-8 length for the scan statistics:
+    * encoded once per loaded body, on the first statistics call, so a
+    * scan whose plan never asks for statistics pays nothing. */
   private final class Entry(val body: String, val loadedAtNanos: Long) {
+    lazy val bodyBytes: Long = body.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong
     val rowsBySchema = TrieMap.empty[String, Array[InternalRow]]
   }
 
   private val entries = TrieMap.empty[String, Entry]
   private val locks = TrieMap.empty[String, Object]
 
-  /** Total HTTP loads performed by this JVM (observability + tests). */
-  @volatile private var loads = 0L
-  def loadCount: Long = loads
+  /** Total HTTP loads performed by this JVM (observability + tests).
+    * Atomic: loads of different keys run under different locks. */
+  private val loads = new java.util.concurrent.atomic.AtomicLong
+  def loadCount: Long = loads.get()
+
+  /** Entries are per (url, xpath) and per refresh interval. */
+  private def keyOf(opts: HttpOptions): String =
+    s"${opts.cacheKey}|${opts.refreshInterval.toMillis}"
 
   def get(opts: HttpOptions, schema: StructType): Array[InternalRow] = {
-    val key = s"${opts.cacheKey}|${opts.refreshInterval.toMillis}"
+    val key = keyOf(opts)
     val lock = locks.getOrElseUpdate(key, new Object)
     lock.synchronized {
       val ttlNanos = opts.refreshInterval.toNanos
@@ -55,7 +64,7 @@ object SnapshotCache extends Logging {
           val body = HttpFetcher.fetchBody(opts) // failure propagates: no stale-serving
           val e = new Entry(body, System.nanoTime())
           entries.put(key, e)
-          loads += 1
+          loads.incrementAndGet()
           e
       }
       // Deserialization is narrowed to the pruned schema (projection
@@ -68,18 +77,14 @@ object SnapshotCache extends Logging {
   /** Bytes of the cached payload body for `opts`, if this JVM has loaded
     * it (feeds the scan's statistics estimate so Catalyst's broadcast
     * decision can see the real size once known). */
-  def loadedBodyBytes(opts: HttpOptions): Option[Long] = {
-    val key = s"${opts.cacheKey}|${opts.refreshInterval.toMillis}"
-    entries.get(key).map(_.body.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong)
-  }
+  def loadedBodyBytes(opts: HttpOptions): Option[Long] =
+    entries.get(keyOf(opts)).map(_.bodyBytes)
 
   /** Row count of the cached payload for `opts`, if this JVM has parsed
     * it under any schema (projection changes the columns, never the row
     * count) — feeds the scan's numRows statistic. */
-  def loadedRowCount(opts: HttpOptions): Option[Long] = {
-    val key = s"${opts.cacheKey}|${opts.refreshInterval.toMillis}"
-    entries.get(key).flatMap(_.rowsBySchema.values.headOption.map(_.size.toLong))
-  }
+  def loadedRowCount(opts: HttpOptions): Option[Long] =
+    entries.get(keyOf(opts)).flatMap(_.rowsBySchema.values.headOption.map(_.size.toLong))
 
   /** Drop all cached snapshots (tests / forced refresh). Lock objects are
     * deliberately kept: clearing them would let a thread inside [[get]]

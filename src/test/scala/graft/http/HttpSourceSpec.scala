@@ -282,6 +282,32 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
       Seq((1, "Rome", 41.9), (2, "Oslo", 59.9)))
   }
 
+  // Loads of different keys run under different per-key locks, so the
+  // JVM-wide load counter must not lose an increment to a concurrent load.
+  test("concurrent first touches of distinct keys count every load once") {
+    import graft.sources.http.HttpOptions
+    import scala.jdk.CollectionConverters._
+    val n = 16
+    server.payload = (0 until n).map(i => s""""k$i": [{"id": $i}]""")
+      .mkString("{", ",", "}")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT")
+    val loads0 = SnapshotCache.loadCount
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      val got = (0 until n).map { i =>
+        val opts = HttpOptions.parse(Map("url" -> server.url, "xpath" -> s"/k$i").asJava)
+        pool.submit(new java.util.concurrent.Callable[Int] {
+          def call(): Int = { start.await(); SnapshotCache.get(opts, schema)(0).getInt(0) }
+        })
+      }
+      start.countDown()
+      assert(got.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS)) == (0 until n))
+    } finally pool.shutdownNow()
+    assert(SnapshotCache.loadCount - loads0 == n)
+    assert(server.requestCount == n)
+  }
+
   test("schema is mandatory") {
     val e = intercept[Exception](
       spark.read.format("http-full-cache").option("url", server.url).load())
