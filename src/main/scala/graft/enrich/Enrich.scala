@@ -14,9 +14,13 @@ import org.apache.spark.sql.functions.broadcast
   *
   * Works identically for a streaming probe: a stream-static join re-plans
   * the static side every micro-batch, and the TTL cache decides whether
-  * that re-plan re-fetches (refresh semantics, SURVEY.md §7.3). Do not
-  * cache/persist the returned frame across micro-batches — that would pin
-  * a stale snapshot.
+  * that re-plan re-fetches (refresh semantics, SURVEY.md §7.3). The
+  * broadcast relation is reused across queries and micro-batches, but
+  * keyed by snapshot load ([[graft.plans.FullCacheBroadcastExchangeExec]]):
+  * a batch within the interval reuses it, the first batch after expiry
+  * builds a new one from the new payload. So no caching on the caller's
+  * side is needed — and `lookup` should stay the raw source frame, since
+  * persisting it would pin one snapshot past its refresh.
   */
 object Enrich {
 

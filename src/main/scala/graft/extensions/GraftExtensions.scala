@@ -27,6 +27,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // full-cache joins broadcast by semantic guarantee, not by statistics
     // (see the rule's scaladoc for the 100 TB rationale)
     ext.injectOptimizerRule(graft.plans.BroadcastFullCacheJoins(_))
+    // ...and that broadcast is built once per snapshot load: adaptive plans
+    // take the rule as a stage prep rule, non-adaptive ones (stateful
+    // micro-batches) before their columnar transitions
+    ext.injectQueryStagePrepRule(_ => graft.plans.FullCacheBroadcasts)
+    ext.injectColumnar(_ => graft.plans.FullCacheBroadcasts.columnar)
     ext.injectFunction((
       new FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProductExpr].getName, "dot_product"),

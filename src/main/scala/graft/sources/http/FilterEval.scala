@@ -1,8 +1,10 @@
 package graft.sources.http
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Best-effort evaluation of V1 pushdown filters against cached snapshot
   * rows (beyond reference parity — the reference pushes nothing,
@@ -40,6 +42,13 @@ object FilterEval {
       case _ => false
     })
 
+  /** The rows of one snapshot that pass every pushed filter: what a scan
+    * of it emits, on an executor or in a driver-side broadcast build. */
+  def prefilter(rows: Array[InternalRow], pushed: Array[Filter],
+                schema: StructType): Array[InternalRow] =
+    if (pushed.isEmpty) rows
+    else rows.filter(r => pushed.forall(eval(_, r, schema)))
+
   /** True iff the row passes; never false for a row SQL would keep (null
     * atoms yield false here, and SQL can't yield TRUE on them either, so
     * every composition that is false here is not-TRUE in SQL). */
@@ -61,8 +70,10 @@ object FilterEval {
   private def idx(schema: StructType, a: String): Option[Int] =
     if (schema.fieldNames.contains(a)) Some(schema.fieldIndex(a)) else None
 
-  /** sign(rowValue compare literal); None when the row value is null or
-    * the attribute is absent from the (pruned) schema. */
+  /** sign(rowValue compare literal) in SQL order; None when the row value
+    * is null or the attribute is absent from the (pruned) schema. SQL
+    * order, not Java's: -0.0 equals 0.0 and NaN equals NaN (above every
+    * other value), and strings order by UTF-8 bytes, not UTF-16 units. */
   private def cmp(attr: String, value: Any, row: InternalRow,
                   schema: StructType): Option[Int] = {
     idx(schema, attr).flatMap { i =>
@@ -72,11 +83,12 @@ object FilterEval {
           value.asInstanceOf[Number].intValue))
         case LongType    => Some(java.lang.Long.compare(row.getLong(i),
           value.asInstanceOf[Number].longValue))
-        case DoubleType  => Some(java.lang.Double.compare(row.getDouble(i),
+        case DoubleType  => Some(SQLOrderingUtil.compareDoubles(row.getDouble(i),
           value.asInstanceOf[Number].doubleValue))
-        case FloatType   => Some(java.lang.Float.compare(row.getFloat(i),
+        case FloatType   => Some(SQLOrderingUtil.compareFloats(row.getFloat(i),
           value.asInstanceOf[Number].floatValue))
-        case StringType  => Some(row.getUTF8String(i).toString.compareTo(value.toString))
+        case StringType  => Some(row.getUTF8String(i).compareTo(
+          UTF8String.fromString(value.toString)))
         case BooleanType => Some(java.lang.Boolean.compare(row.getBoolean(i),
           value.asInstanceOf[Boolean]))
         case _           => None

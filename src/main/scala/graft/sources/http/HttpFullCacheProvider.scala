@@ -76,11 +76,20 @@ final class HttpScanBuilder(fullSchema: StructType, opts: HttpOptions)
   override def build(): Scan = new HttpScan(required, opts, pushed)
 }
 
-final class HttpScan(schema: StructType, opts: HttpOptions,
-                     pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+/** Value equality over (schema, options, pushed filters): `BatchScanExec`
+  * compares scans through their `Batch`, so two plannings of the same read
+  * (two micro-batches, two queries) canonicalize equal — the key under
+  * which [[SnapshotCache.broadcast]] memoizes a lookup relation. */
+final class HttpScan(schema: StructType, val opts: HttpOptions,
+                     val pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
+  override def equals(other: Any): Boolean = other match {
+    case o: HttpScan => o.readSchema() == schema && o.opts == opts && o.pushed.toSeq == pushed.toSeq
+    case _ => false
+  }
+  override def hashCode(): Int = (schema, opts, pushed.toSeq).hashCode()
   override def description(): String =
     s"http-full-cache url=${opts.url} xpath='${opts.xpath}' " +
       s"refresh=${opts.refreshInterval} PushedFilters: [${pushed.mkString(", ")}]"
@@ -157,18 +166,16 @@ object HttpReaderFactory extends PartitionReaderFactory {
 }
 
 /** Iterates the cached snapshot; the fetch (with retry) happens in
-  * [[SnapshotCache.get]] iff the TTL has elapsed. Runs on the driver when
-  * the relation is collected for broadcast, else on an executor. Pushed
-  * filters prune rows at iteration time (never cached per-filter — the
-  * snapshot memo stays per (payload, schema)). */
+  * [[SnapshotCache.get]] iff the TTL has elapsed. Runs in a task; a
+  * lookup-join broadcast of the snapshot does not run it, since
+  * [[graft.plans.FullCacheBroadcastExchangeExec]] builds the relation on
+  * the driver from the same rows. Pushed filters prune rows at iteration
+  * time (never cached per-filter — the snapshot memo stays per
+  * (payload, schema)). */
 final class HttpPartitionReader(opts: HttpOptions, schema: StructType,
     pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends PartitionReader[InternalRow] {
-  private val rows = {
-    val all = SnapshotCache.get(opts, schema)
-    if (pushed.isEmpty) all
-    else all.filter(r => pushed.forall(FilterEval.eval(_, r, schema)))
-  }
+  private val rows = FilterEval.prefilter(SnapshotCache.get(opts, schema), pushed, schema)
   private var i = -1
   override def next(): Boolean = { i += 1; i < rows.length }
   override def get(): InternalRow = rows(i)

@@ -1,5 +1,7 @@
 package graft.sources.http
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
@@ -23,6 +25,15 @@ import scala.collection.concurrent.TrieMap
   *  - staleness bounded by the interval: the first scan after expiry sees
   *    the new payload (ref: :428-543).
   *
+  * Like the reference's full cache, which is built once per reload and
+  * then serves every lookup, a load also memoizes the broadcast lookup
+  * relations built from it ([[broadcast]], used by
+  * [[graft.plans.FullCacheBroadcastExchangeExec]]): a query or micro-batch
+  * that runs within the interval reuses the relation instead of
+  * re-collecting and re-hashing the unchanged snapshot. Reuse is keyed by
+  * load — a reload replaces the entry together with its relations — so it
+  * can never pin a stale snapshot.
+  *
   * A failed refresh (after the reader's retries) propagates and fails the
   * query — no stale-serving fallback, matching reference semantics
   * (ref: :546-672). In local mode there is one JVM; on a cluster the
@@ -32,12 +43,31 @@ import scala.collection.concurrent.TrieMap
   */
 object SnapshotCache extends Logging {
 
+  /** One lookup relation built from one load, with the row count and size
+    * the planner reads back once the broadcast has run. */
+  final case class Relation(broadcast: Broadcast[Any], numRows: Long, dataSize: Long)
+
+  /** Relations held per load; the least recently used one beyond this is
+    * unpersisted from the executors (the driver keeps its copy until
+    * `ContextCleaner` frees it, so a query still reading it re-fetches). */
+  val MaxRelationsPerLoad = 8
+
+  private type RelationKey = (SparkContext, AnyRef)
+
   /** `bodyBytes` is the body's UTF-8 length for the scan statistics:
     * encoded once per loaded body, on the first statistics call, so a
-    * scan whose plan never asks for statistics pays nothing. */
+    * scan whose plan never asks for statistics pays nothing. `relations`
+    * is touched only under the key's lock, in access order (LRU). */
   private final class Entry(val body: String, val loadedAtNanos: Long) {
     lazy val bodyBytes: Long = body.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong
     val rowsBySchema = TrieMap.empty[String, Array[InternalRow]]
+    val relations = new java.util.LinkedHashMap[RelationKey, Relation](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[RelationKey, Relation]): Boolean = {
+        val evict = size() > MaxRelationsPerLoad
+        if (evict && !e.getKey._1.isStopped) e.getValue.broadcast.unpersist(false)
+        evict
+      }
+    }
   }
 
   private val entries = TrieMap.empty[String, Entry]
@@ -48,11 +78,17 @@ object SnapshotCache extends Logging {
   private val loads = new java.util.concurrent.atomic.AtomicLong
   def loadCount: Long = loads.get()
 
+  /** Total lookup relations built by [[broadcast]] in this JVM. */
+  private val builds = new java.util.concurrent.atomic.AtomicLong
+  def relationBuilds: Long = builds.get()
+
   /** Entries are per (url, xpath) and per refresh interval. */
   private def keyOf(opts: HttpOptions): String =
     s"${opts.cacheKey}|${opts.refreshInterval.toMillis}"
 
-  def get(opts: HttpOptions, schema: StructType): Array[InternalRow] = {
+  /** Runs `f` on the entry for `opts` under the key's lock, loading it
+    * first when there is none or its TTL has elapsed. */
+  private def withEntry[T](opts: HttpOptions)(f: Entry => T): T = {
     val key = keyOf(opts)
     val lock = locks.getOrElseUpdate(key, new Object)
     lock.synchronized {
@@ -67,12 +103,38 @@ object SnapshotCache extends Logging {
           loads.incrementAndGet()
           e
       }
-      // Deserialization is narrowed to the pruned schema (projection
-      // pushdown) but never triggers another fetch.
-      entry.rowsBySchema.getOrElseUpdate(schema.catalogString,
-        HttpFetcher.parseRows(entry.body, opts, schema))
+      f(entry)
     }
   }
+
+  // Deserialization is narrowed to the pruned schema (projection pushdown)
+  // but never triggers another fetch.
+  private def rowsOf(entry: Entry, opts: HttpOptions, schema: StructType): Array[InternalRow] =
+    entry.rowsBySchema.getOrElseUpdate(schema.catalogString,
+      HttpFetcher.parseRows(entry.body, opts, schema))
+
+  def get(opts: HttpOptions, schema: StructType): Array[InternalRow] =
+    withEntry(opts)(rowsOf(_, opts, schema))
+
+  /** The lookup relation `key` names, built at most once per load: the
+    * same TTL check and load as [[get]], then the relation this load
+    * already holds for `key`, or `build` over this load's rows for
+    * `schema` — rows from this very call, so a build never reads the cache
+    * twice. `key` pairs the SparkContext the broadcast lives in with
+    * everything the relation depends on (the canonical exchange). A
+    * reload replaces the entry and its relations with it; a relation of a
+    * stopped SparkContext is dropped, never returned. */
+  def broadcast(opts: HttpOptions, schema: StructType, key: (SparkContext, AnyRef))(
+      build: Array[InternalRow] => Relation): Relation =
+    withEntry(opts) { e =>
+      e.relations.keySet.removeIf(_._1.isStopped)
+      Option(e.relations.get(key)).getOrElse {
+        val r = build(rowsOf(e, opts, schema))
+        builds.incrementAndGet()
+        e.relations.put(key, r)
+        r
+      }
+    }
 
   /** Bytes of the cached payload body for `opts`, if this JVM has loaded
     * it (feeds the scan's statistics estimate so Catalyst's broadcast
@@ -86,9 +148,10 @@ object SnapshotCache extends Logging {
   def loadedRowCount(opts: HttpOptions): Option[Long] =
     entries.get(keyOf(opts)).flatMap(_.rowsBySchema.values.headOption.map(_.size.toLong))
 
-  /** Drop all cached snapshots (tests / forced refresh). Lock objects are
-    * deliberately kept: clearing them would let a thread inside [[get]]
-    * (holding the old lock) race a new caller (holding a fresh one) into
-    * two simultaneous fetches for the same key. */
+  /** Drop all cached snapshots and the relations built from them (tests /
+    * forced refresh). Lock objects are deliberately kept: clearing them
+    * would let a thread inside [[get]] (holding the old lock) race a new
+    * caller (holding a fresh one) into two simultaneous fetches for the
+    * same key. */
   def invalidateAll(): Unit = entries.clear()
 }

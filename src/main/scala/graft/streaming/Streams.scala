@@ -14,16 +14,20 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   * The enrichment mapping (SURVEY.md §7.3): Flink reloads its lookup cache
   * on a timer thread; in Spark the stream-static join re-plans the static
   * side every micro-batch, and the source's TTL [[graft.sources.http.SnapshotCache]]
-  * decides whether that re-plan re-fetches. Invariants preserved: ≤1 fetch
-  * per refresh interval, staleness ≤ interval, refresh failure fails the
-  * stream (no stale-serving).
+  * decides whether that re-plan re-fetches. The broadcast relation is
+  * built once per snapshot load and reused by every micro-batch within
+  * the interval. Invariants preserved: ≤1 fetch per refresh interval,
+  * staleness ≤ interval, refresh failure fails the stream (no
+  * stale-serving).
   */
 object Streams {
 
   /** Processing-time enrichment of an unbounded stream against a cached
     * lookup table (the reference's core use case, README.md:106-133).
-    * IMPORTANT: `lookup` must be the raw HTTP-source frame — persisting it
-    * would pin one snapshot and defeat refresh. */
+    * Reuse across micro-batches is keyed by snapshot load, so a batch never
+    * sees a relation older than the TTL allows. `lookup` must be the raw
+    * HTTP-source frame: persisting it would pin one snapshot and defeat
+    * refresh. */
   def enrich(stream: DataFrame, lookup: DataFrame, condition: org.apache.spark.sql.Column,
              joinType: String = "left"): DataFrame =
     Enrich.lookupJoin(stream, lookup, condition, joinType)

@@ -4,6 +4,8 @@ import graft.http.Fixtures
 import graft.sources.http.SnapshotCache
 import graft.sources.http.testkit.EmbeddedJsonServer
 import graft.streaming.{Streams, TimedEvent, UserEvent}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -141,6 +143,88 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(spark.table("one_fetch").count() == 3)
         assert(server.requestCount == 1,
           s"expected exactly one fetch across micro-batches, got ${server.requestCount}")
+      } finally graft.util.QuietLogs.quietStop(q)
+    } finally server.stop()
+  }
+
+  private def lastPlan(q: org.apache.spark.sql.streaming.StreamingQuery): SparkPlan =
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan
+
+  /** The http-full-cache broadcasts of a plan, through AQE's stages. */
+  private def fullCacheExchanges(p: SparkPlan): Seq[graft.plans.FullCacheBroadcastExchangeExec] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    nodes(p).collect { case e: graft.plans.FullCacheBroadcastExchangeExec => e }
+  }
+
+  test("micro-batches build the lookup broadcast once per snapshot load") {
+    import spark.implicits._
+    SnapshotCache.invalidateAll()
+    val server = new EmbeddedJsonServer
+    try {
+      server.payload = Fixtures.usersJson()
+      val users = spark.read.format("http-full-cache")
+        .schema(Fixtures.usersSchema)
+        .option("url", server.url)
+        .option("cache.refresh-interval", "PT3S")
+        .load()
+      val input = new MemoryStream[Int](1, spark)
+      val q = Streams.enrich(input.toDF.withColumnRenamed("value", "user_id"),
+          users, col("user_id") === col("id"), "inner")
+        .select("user_id", "name")
+        .writeStream.format("memory").queryName("memo_batches").outputMode("append").start()
+      try {
+        val (loads0, builds0) = (SnapshotCache.loadCount, SnapshotCache.relationBuilds)
+        for (batch <- 1 to 5) { input.addData(batch); q.processAllAvailable() }
+        // a stateless stream's micro-batches run adaptively
+        assert(lastPlan(q).exists(_.isInstanceOf[AdaptiveSparkPlanExec]))
+        assert(fullCacheExchanges(lastPlan(q)).size == 1, lastPlan(q).toString)
+        assert(SnapshotCache.loadCount - loads0 == 1)
+        assert(SnapshotCache.relationBuilds - builds0 == 1,
+          s"5 batches on one load built ${SnapshotCache.relationBuilds - builds0} relations")
+        server.payload = Fixtures.usersJson(prefix = "Updated")
+        Thread.sleep(3200) // TTL expiry
+        for (batch <- 6 to 8) { input.addData(batch); q.processAllAvailable() }
+        val names = spark.table("memo_batches").collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+        assert((1 to 5).forall(i => names(i) == s"Mock Name$i"), names)
+        assert((6 to 8).forall(i => names(i) == s"Updated Name$i"), names)
+        // one more load, one more build: builds follow loads
+        assert(SnapshotCache.loadCount - loads0 == 2)
+        assert(SnapshotCache.relationBuilds - builds0 == SnapshotCache.loadCount - loads0)
+        assert(server.requestCount == 2)
+      } finally graft.util.QuietLogs.quietStop(q)
+    } finally server.stop()
+  }
+
+  test("stateful micro-batches, planned without AQE, reuse the lookup broadcast too") {
+    import spark.implicits._
+    SnapshotCache.invalidateAll()
+    val server = new EmbeddedJsonServer
+    try {
+      server.payload = Fixtures.usersJson()
+      val users = spark.read.format("http-full-cache")
+        .schema(Fixtures.usersSchema)
+        .option("url", server.url)
+        .option("cache.refresh-interval", "PT1H")
+        .load()
+      val input = new MemoryStream[Int](1, spark)
+      val q = Streams.enrich(input.toDF.withColumnRenamed("value", "user_id"),
+          users, col("user_id") === col("id"), "inner")
+        .groupBy("name").count()
+        .writeStream.format("memory").queryName("memo_stateful").outputMode("complete").start()
+      try {
+        val builds0 = SnapshotCache.relationBuilds
+        for (batch <- Seq(1, 2, 2, 3)) { input.addData(batch); q.processAllAvailable() }
+        assert(!lastPlan(q).exists(_.isInstanceOf[AdaptiveSparkPlanExec]), lastPlan(q).toString)
+        assert(fullCacheExchanges(lastPlan(q)).size == 1, lastPlan(q).toString)
+        val counts = spark.table("memo_stateful").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(counts == Map("Mock Name1" -> 1L, "Mock Name2" -> 2L, "Mock Name3" -> 1L), counts)
+        assert(SnapshotCache.relationBuilds - builds0 == 1)
+        assert(server.requestCount == 1)
       } finally graft.util.QuietLogs.quietStop(q)
     } finally server.stop()
   }

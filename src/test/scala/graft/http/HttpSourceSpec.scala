@@ -2,8 +2,11 @@ package graft.http
 
 import graft.GraftSession
 import graft.enrich.Enrich
+import graft.plans.FullCacheBroadcastExchangeExec
 import graft.sources.http.SnapshotCache
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,8 +26,10 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
   override def afterEach(): Unit = server.stop()
 
-  private def users(extra: (String, String)*): DataFrame = {
-    val r = spark.read.format("http-full-cache")
+  private def users(extra: (String, String)*): DataFrame = usersIn(spark, extra: _*)
+
+  private def usersIn(session: SparkSession, extra: (String, String)*): DataFrame = {
+    val r = session.read.format("http-full-cache")
       .schema(Fixtures.usersSchema)
       .option("url", server.url)
       .option("xpath", "")
@@ -105,6 +110,36 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
       assert(df.select("id").collect().map(_.getInt(0)).toSet == want,
         df.queryExecution.executedPlan.toString)
     }
+    // SQL order, not Java's: -0.0 = 0.0, NaN = NaN and above every number,
+    // strings by UTF-8 bytes ('\uffff' sorts below an emoji's surrogates in
+    // UTF-16 but above them in UTF-8). Checked against a local frame of the
+    // same rows, since the prefilter must never drop a row SQL keeps.
+    def row(id: Int, x: String, f: String, s: String) =
+      "{\"id\": " + id + ", \"x\": " + x + ", \"f\": " + f + ", \"s\": \"" + s + "\"}"
+    server.payload = Seq(row(1, "-0.0", "-0.0", "\\uffff"),
+      row(2, "0.0", "0.0", "\\ud83d\\ude00"), row(3, "1.0", "1.0", "a"),
+      row(4, "\"NaN\"", "2.0", "b")).mkString("[", ",", "]")
+    SnapshotCache.invalidateAll()
+    val src = spark.read.format("http-full-cache").schema("id INT, x DOUBLE, f FLOAT, s STRING")
+      .option("url", server.url).load()
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(src.collect(): _*), src.schema)
+    val shapes: Seq[DataFrame => DataFrame] = Seq(
+      _.filter($"x" >= 0.0), _.filter($"x" === 0.0), _.filter($"x" <= -0.0),
+      _.filter($"x" < 0.0), _.filter($"x" > 0.5), _.filter($"x".isin(0.0, Double.NaN)),
+      _.filter($"x" === Double.NaN), _.filter($"f" >= 0.0f), _.filter($"f" === 0.0f),
+      _.filter($"s" > "\uffff"), _.filter($"s" < "\ud83d\ude00"), _.filter($"s" >= "b"),
+      _.filter(!($"x" < 0.0)))
+    shapes.foreach { shape =>
+      val got = shape(src)
+      assert(got.queryExecution.executedPlan.toString.contains("PushedFilters: [") &&
+        !got.queryExecution.executedPlan.toString.contains("PushedFilters: []"),
+        got.queryExecution.executedPlan.toString)
+      val want = shape(local).select("id").collect().map(_.getInt(0)).sorted.toSeq
+      assert(got.select("id").collect().map(_.getInt(0)).sorted.toSeq == want,
+        got.queryExecution.executedPlan.toString)
+    }
+    assert(shapes.head(src).count() == 4) // -0.0, 0.0, 1.0 and NaN are all >= 0.0
   }
 
   // The reference's primary UX is SQL DDL (CREATE TABLE ... WITH
@@ -312,5 +347,159 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     val e = intercept[Exception](
       spark.read.format("http-full-cache").option("url", server.url).load())
     assert(e.getMessage.toLowerCase.contains("schema"))
+  }
+
+  /** The http-full-cache broadcasts of an executed plan, through AQE's
+    * stages. */
+  private def fullCacheExchanges(df: DataFrame): Seq[FullCacheBroadcastExchangeExec] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    nodes(df.queryExecution.executedPlan).collect { case e: FullCacheBroadcastExchangeExec => e }
+  }
+
+  private def builds = SnapshotCache.relationBuilds
+
+  test("adaptive lookup join builds its broadcast once per load, on the driver, without scanning") {
+    import spark.implicits._
+    val probe = (1 to 12).toDF("user_id")
+    def join = Enrich.lookupJoin(probe, users(), $"user_id" === $"id", "inner")
+      .select($"user_id", $"name")
+    val (loads0, builds0) = (SnapshotCache.loadCount, builds)
+    val df = join
+    val rows = df.collect()
+    assert(rows.length == 10 && rows.forall(r => r.getString(1) == s"Mock Name${r.getInt(0)}"))
+    assert(df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
+    val ex = fullCacheExchanges(df)
+    assert(ex.size == 1, df.queryExecution.executedPlan.toString)
+    assert(ex.head.metrics("numOutputRows").value == 10)
+    // the scan under the exchange never ran: no collect job read it
+    assert(ex.head.child.collectLeaves().head.metrics("numOutputRows").value == 0)
+    (1 to 3).foreach(_ => assert(join.collect().length == 10))
+    assert(SnapshotCache.loadCount - loads0 == 1 && builds - builds0 == 1)
+    assert(server.requestCount == 1)
+  }
+
+  test("TTL expiry adds exactly one load and one relation build") {
+    import spark.implicits._
+    val probe = (1 to 10).toDF("id")
+    def names = Enrich.lookupJoin(probe, users("cache.refresh-interval" -> "PT2S"), Seq("id"), "inner")
+      .select("name").collect().map(_.getString(0))
+    val (loads0, builds0) = (SnapshotCache.loadCount, builds)
+    assert(names.length == 10 && names.forall(_.startsWith("Mock")))
+    assert(names.length == 10)
+    assert(SnapshotCache.loadCount - loads0 == 1 && builds - builds0 == 1)
+    server.payload = Fixtures.usersJson(prefix = "Updated")
+    Thread.sleep(2200)
+    assert(names.length == 10 && names.forall(_.startsWith("Updated")))
+    assert(names.forall(_.startsWith("Updated")))
+    assert(SnapshotCache.loadCount - loads0 == 2 && builds - builds0 == 2)
+    assert(server.requestCount == 2)
+  }
+
+  test("on one load, queries differing in pushed filter, projection, join key or join type stay exact") {
+    import spark.implicits._
+    val u = users()
+    val local = spark.createDataFrame(java.util.Arrays.asList(u.collect(): _*), u.schema)
+    val probe = Seq[Integer](1, 2, 3, 5, 8, 11, null).toDF("k")
+    probe.createOrReplaceTempView("memo_probe")
+    val variants: Seq[DataFrame => DataFrame] = Seq(
+      l => probe.join(broadcast(l), probe("k") === l("id"), "inner").select(probe("k"), l("name")),
+      l => probe.join(broadcast(l), probe("k") === l("id"), "left").select(probe("k"), l("name")),
+      l => probe.join(broadcast(l), probe("k") === l("id"), "inner").select(probe("k"), l("email")),
+      l => { val f = l.filter(l("id") > 3)
+             probe.join(broadcast(f), probe("k") === f("id"), "inner").select(probe("k"), f("name")) },
+      l => { val f = l.filter(l("id") > 5)
+             probe.join(broadcast(f), probe("k") === f("id"), "inner").select(probe("k"), f("name")) },
+      l => probe.join(broadcast(l), probe("k") === l("id") + 1, "inner").select(probe("k"), l("name")),
+      l => probe.join(broadcast(l), probe("k") === l("id"), "left_anti"),
+      // a non-equi join broadcasts the rows themselves (nested-loop join)
+      l => probe.join(broadcast(l), probe("k") > l("id") * 2, "inner").select(probe("k"), l("id")),
+      l => { l.createOrReplaceTempView("memo_lookup")
+             spark.sql("SELECT k FROM memo_probe WHERE k NOT IN (SELECT id FROM memo_lookup)") })
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val loads0 = SnapshotCache.loadCount
+    val builds0 = builds
+    val canonical = variants.map { v =>
+      val df = v(u)
+      assert(rows(df) == rows(v(local)), df.queryExecution.executedPlan.toString)
+      val ex = fullCacheExchanges(df)
+      assert(ex.size == 1, df.queryExecution.executedPlan.toString)
+      ex.head.canonicalized
+    }
+    // inner and left join on the same key share one relation, so fewer
+    // relations than variants; each distinct exchange was built once
+    assert(canonical.distinct.size == variants.size - 1)
+    assert(builds - builds0 == canonical.distinct.size)
+    assert(canonical.distinct.size <= SnapshotCache.MaxRelationsPerLoad)
+    variants.foreach(v => assert(rows(v(u)) == rows(v(local))))
+    assert(builds - builds0 == canonical.distinct.size)
+    assert(SnapshotCache.loadCount - loads0 == 0 && server.requestCount == 1)
+  }
+
+  test("concurrent first queries make one fetch and one relation build") {
+    import spark.implicits._
+    val probe = (1 to 10).toDF("id")
+    val builds0 = builds
+    val n = 4
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      val got = (0 until n).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Long] {
+          def call(): Long = {
+            start.await()
+            Enrich.lookupJoin(probe, users(), Seq("id"), "inner").count()
+          }
+        })
+      }
+      start.countDown()
+      assert(got.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)) == Seq.fill(n)(10L))
+    } finally pool.shutdownNow()
+    assert(server.requestCount == 1)
+    assert(builds - builds0 == 1)
+  }
+
+  test("a load holds at most MaxRelationsPerLoad relations, evicting the least recently used") {
+    import spark.implicits._
+    val probe = (1 to 10).toDF("k")
+    val u = users()
+    def join(i: Int) = {
+      val f = u.filter(u("id") > i)
+      probe.join(broadcast(f), probe("k") === f("id"), "inner").count()
+    }
+    val cap = SnapshotCache.MaxRelationsPerLoad
+    assert(join(0) == 10)
+    val builds0 = builds
+    (1 to cap).foreach(i => assert(join(i % 10) == math.max(0, 10 - i % 10)))
+    assert(builds - builds0 == cap) // the cap+1-th relation evicted filter 0
+    assert(join(cap) == 10 - cap) // the most recent is still held
+    assert(builds - builds0 == cap)
+    assert(join(0) == 10) // the evicted one is rebuilt
+    assert(builds - builds0 == cap + 1)
+    assert(server.requestCount == 1)
+  }
+
+  // Must stay the suite's last test: it stops the suite's session. The
+  // session it leaves behind is the active one for later suites.
+  test("a restarted SparkSession rebuilds the relation instead of reusing a stopped one") {
+    def count(s: SparkSession): Long = {
+      import s.implicits._
+      Enrich.lookupJoin((1 to 10).toDF("id"), usersIn(s), Seq("id"), "inner").count()
+    }
+    assert(count(spark) == 10)
+    val (loads0, builds0) = (SnapshotCache.loadCount, builds)
+    assert(count(spark) == 10)
+    assert(builds == builds0)
+    graft.ops.Caches.releaseAll()
+    spark.stop()
+    val restarted = GraftSession.local("4")
+    assert(restarted.sparkContext ne spark.sparkContext)
+    assert(count(restarted) == 10)
+    assert(SnapshotCache.loadCount == loads0, "the snapshot itself is still fresh")
+    assert(builds - builds0 == 1)
+    assert(server.requestCount == 1)
   }
 }
