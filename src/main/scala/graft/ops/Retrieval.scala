@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.util.Parallel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -238,16 +239,14 @@ object Retrieval {
     // fixed per-write machinery (plan + nBuckets partition commits) at
     // gate scale — run them concurrently so the commit overhead overlaps
     // (guide §2.6 "overlap independent jobs")
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq(
-      Future {
+    Parallel.all(
+      () => {
         model.postings.withColumn("wb", termBucket(col("w"), nBuckets))
           .repartition(col("wb")).sortWithinPartitions(col("wb"), col("w"))
           .write.mode("overwrite").partitionBy("wb").parquet(s"$path/postings")
       },
-      Future {
+      () => {
         model.df.withColumn("wb", termBucket(col("w"), nBuckets))
           .repartition(col("wb")).sortWithinPartitions(col("wb"), col("w"))
           .write.mode("overwrite").partitionBy("wb").parquet(s"$path/df")
@@ -256,11 +255,10 @@ object Retrieval {
       // compaction owns a content-derived key — serving aggregates the
       // tiny per-fold rows, and an at-least-once replayed fold OVERWRITES
       // its own row instead of double-adding (see [[bm25Compact]])
-      Future {
+      () => {
         model.stats.withColumn("bk", lit("base")).coalesce(1)
           .write.mode("overwrite").partitionBy("bk").parquet(s"$path/stats")
       })
-    writes.foreach(Await.result(_, Duration.Inf))
   }
 
   /** COMPACTION of a written [[bm25WriteModel]] tree (the text analog of
@@ -384,18 +382,12 @@ object Retrieval {
       withDynamicOverwrite {
         // independent target dirs, both reading mergedP's severed blocks —
         // overlap the two partitioned-overwrite commits (guide §2.6)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
-        val w1 = Future {
-          mergedP.df.write.mode("overwrite").partitionBy("wb")
-            .parquet(s"$path/postings")
-        }
-        val w2 = Future {
-          mergedDf.select(col("w"), col("df"), col("wb"))
-            .write.mode("overwrite").partitionBy("wb").parquet(s"$path/df")
-        }
-        Seq(w1, w2).foreach(Await.result(_, Duration.Inf))
+        Parallel.all(
+          () => mergedP.df.write.mode("overwrite").partitionBy("wb")
+            .parquet(s"$path/postings"),
+          () => mergedDf.select(col("w"), col("df"), col("wb"))
+            .write.mode("overwrite").partitionBy("wb").parquet(s"$path/df"))
       }
       // the stats row writes DIRECTLY into its keyed subdirectory —
       // dir-scoped overwrite, deliberately NOT partitionBy+dynamic:

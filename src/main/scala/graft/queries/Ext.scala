@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.ops.{AsofJoin, Chunking, Classify, Cms, Dedup, Dsir, EventAnalytics, Export, Graph, HistQuantile, LangModel, LinearProbe, Multimodal, Rerank, Retrieval, Similarity, TextStats, TopK}
 import graft.functions.VectorFunctions
+import graft.util.Parallel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -545,18 +546,14 @@ object Ext {
       // them concurrently so the two write/commit chains overlap
       // (guide §2.6); results are the reads below, unchanged.
       locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
-        val textSide = Future {
-          Retrieval.bm25WriteModel(Retrieval.bm25BuildModel(
+        Parallel.all(
+          () => Similarity.ivfPqEncode(assigned, "vec_id", cb)
+            .select("vec_id", "centroid_id", "codes")
+            .write.mode("overwrite").partitionBy("centroid_id").parquet(annTree),
+          () => Retrieval.bm25WriteModel(Retrieval.bm25BuildModel(
             Tables.documents(s, dir), "doc_id", "text"), bm25Tree,
-            nBuckets = 16)
-        }
-        Similarity.ivfPqEncode(assigned, "vec_id", cb)
-          .select("vec_id", "centroid_id", "codes")
-          .write.mode("overwrite").partitionBy("centroid_id").parquet(annTree)
-        Await.result(textSide, Duration.Inf)
+            nBuckets = 16))
       }
       Retrieval.hybridServeAllSeek(s, bm25Tree, annTree, "doc_id", cents,
           corpus, "embedding", "vec_id", qs, "q_id", "terms", cb,
@@ -587,18 +584,14 @@ object Ext {
       // independent text/ANN artifacts deployed concurrently (the x85
       // overlap; guide §2.6) — results are the reads below, unchanged
       locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
-        val textSide = Future {
-          Retrieval.bm25WriteModel(Retrieval.bm25BuildModel(
+        Parallel.all(
+          () => Similarity.ivfPqEncodePacked(assigned, "vec_id", cb)
+            .select("vec_id", "centroid_id", "codes8")
+            .write.mode("overwrite").partitionBy("centroid_id").parquet(annTree),
+          () => Retrieval.bm25WriteModel(Retrieval.bm25BuildModel(
             Tables.documents(s, dir), "doc_id", "text"), bm25Tree,
-            nBuckets = 16)
-        }
-        Similarity.ivfPqEncodePacked(assigned, "vec_id", cb)
-          .select("vec_id", "centroid_id", "codes8")
-          .write.mode("overwrite").partitionBy("centroid_id").parquet(annTree)
-        Await.result(textSide, Duration.Inf)
+            nBuckets = 16))
       }
       Retrieval.hybridServeAllSeek(s, bm25Tree, annTree, "doc_id", cents,
           corpus, "embedding", "vec_id", qs, "q_id", "terms", cb,

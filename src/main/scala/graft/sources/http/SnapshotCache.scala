@@ -34,6 +34,13 @@ import scala.collection.concurrent.TrieMap
   * load — a reload replaces the entry together with its relations — so it
   * can never pin a stale snapshot.
   *
+  * A load fetches and decodes under the key's lock, so concurrent first
+  * touches still make one fetch; the decode itself runs on every core
+  * ([[HttpFetcher.parseRows]] cuts the selected array into chunks and
+  * parses them on the `http-full-cache-decode-N` threads), so a reload
+  * holds the lock, and the micro-batch that found the TTL expired, for
+  * less time.
+  *
   * A failed refresh (after the reader's retries) propagates and fails the
   * query — no stale-serving fallback, matching reference semantics
   * (ref: :546-672). In local mode there is one JVM; on a cluster the
@@ -55,11 +62,11 @@ object SnapshotCache extends Logging {
   private type RelationKey = (SparkContext, AnyRef)
 
   /** `bodyBytes` is the body's UTF-8 length for the scan statistics:
-    * encoded once per loaded body, on the first statistics call, so a
+    * counted once per loaded body, on the first statistics call, so a
     * scan whose plan never asks for statistics pays nothing. `relations`
     * is touched only under the key's lock, in access order (LRU). */
   private final class Entry(val body: String, val loadedAtNanos: Long) {
-    lazy val bodyBytes: Long = body.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong
+    lazy val bodyBytes: Long = utf8Length(body)
     val rowsBySchema = TrieMap.empty[String, Array[InternalRow]]
     val relations = new java.util.LinkedHashMap[RelationKey, Relation](16, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[RelationKey, Relation]): Boolean = {
@@ -68,6 +75,25 @@ object SnapshotCache extends Logging {
         evict
       }
     }
+  }
+
+  /** `s.getBytes(UTF_8).length` without encoding: a surrogate pair
+    * counts 4 bytes, a lone surrogate 1 (the encoder's `?`). */
+  private[http] def utf8Length(s: String): Long = {
+    var bytes = 0L
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      bytes +=
+        (if (c < 0x80) 1
+         else if (c < 0x800) 2
+         else if (!Character.isSurrogate(c)) 3
+         else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+                  Character.isLowSurrogate(s.charAt(i + 1))) { i += 1; 4 }
+         else 1)
+      i += 1
+    }
+    bytes
   }
 
   private val entries = TrieMap.empty[String, Entry]
