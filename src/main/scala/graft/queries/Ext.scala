@@ -35,26 +35,15 @@ object Ext {
     * scratch root, with the PREVIOUS invocation's tree deleted before a
     * new one is handed out — repeated oracle/bench runs hold at most one
     * live tree per query (the returned frame reads its tree lazily, so
-    * deletion must wait for the next same-name invocation), and a
-    * shutdown hook removes the whole root at JVM exit. Queries run
-    * sequentially in Verify/Bench and in sbt's forked test JVM, so
+    * deletion must wait for the next same-name invocation), and the
+    * root ([[graft.util.Fs.scratchRoot]], tmpfs when writable) is removed
+    * at JVM exit. Part of what these parquet tree writes paid, on ext4
+    * and tmpfs alike, was Hadoop forking `chmod`/`readlink` per file;
+    * `GraftSession`'s fork-free `file:` filesystem removes that. Queries
+    * run sequentially in Verify/Bench and in sbt's forked test JVM, so
     * keep-latest is race-free. */
-  private lazy val scratchRoot: java.nio.file.Path = {
-    // prefer tmpfs over the disk-backed java.io.tmpdir (the StreamGate
-    // gateTmpRoot convention, r18): the written-index queries pay
-    // parquet write+read of their trees inside the timed region, and on
-    // ext4 /tmp the partitioned writes are I/O-wait, not compute — on a
-    // production cluster this is fast local/HDFS storage. Same files,
-    // same commit protocol, only the volume is faster.
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base =
-      if (java.nio.file.Files.isWritable(shm)) shm
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val root = java.nio.file.Files.createTempDirectory(base, "graft_ext_scratch_")
-    Runtime.getRuntime.addShutdownHook(
-      new Thread(() => graft.util.Fs.deleteTree(root)))
-    root
-  }
+  private lazy val scratchRoot: java.nio.file.Path =
+    graft.util.Fs.scratchRoot("graft_ext_scratch_")
   private def scratchTree(name: String): String = {
     val p = scratchRoot.resolve(name)
     graft.util.Fs.deleteTree(p)

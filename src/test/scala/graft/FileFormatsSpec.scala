@@ -1,22 +1,25 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 /** Source/sink format surface beyond parquet (SURVEY.md §2.B sources):
   * CSV and JSON-lines round trips with declared schemas (no inference —
   * consistent with the engine's declared-schema stance), plus partitioned
   * parquet writes (the layout a 100 TB corpus would use). */
-class FileFormatsSpec extends AnyFunSuite {
+class FileFormatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = GraftSession.local("4")
   val dir = "/root/testdata/sf0.001"
 
+  private val tmps = scala.collection.mutable.ArrayBuffer.empty[Path]
   private def tmp(name: String): String = {
     val p = Files.createTempDirectory(s"graft_$name")
-    p.toFile.deleteOnExit()
+    tmps += p
     s"$p/out"
   }
+  override def afterAll(): Unit = tmps.foreach(graft.util.Fs.deleteTree)
 
   test("csv round trip preserves values under declared schema") {
     val nation = Tables.nation(spark, dir)

@@ -277,14 +277,15 @@ class OpsSpec extends AnyFunSuite {
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
     val rest = emb.filter(col("vec_id") =!= 0)
     val tmp = java.nio.file.Files.createTempDirectory("graft_sigs")
-    tmp.toFile.deleteOnExit()
-    Similarity.annBuildSignatures(rest, "embedding", "vec_id")
-      .write.mode("overwrite").parquet(s"$tmp/sigs")
-    val probed = Similarity.annProbe(spark.read.parquet(s"$tmp/sigs"),
-      "embedding", "vec_id", q, 20).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val oneShot = Similarity.annTopKCosine(rest, "embedding", "vec_id", q, 20)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(probed.toSeq == oneShot.toSeq)
+    try {
+      Similarity.annBuildSignatures(rest, "embedding", "vec_id")
+        .write.mode("overwrite").parquet(s"$tmp/sigs")
+      val probed = Similarity.annProbe(spark.read.parquet(s"$tmp/sigs"),
+        "embedding", "vec_id", q, 20).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      val oneShot = Similarity.annTopKCosine(rest, "embedding", "vec_id", q, 20)
+        .collect().map(r => (r.getLong(0), r.getDouble(1)))
+      assert(probed.toSeq == oneShot.toSeq)
+    } finally graft.util.Fs.deleteTree(tmp)
   }
 
   test("annProbe fails loudly on a dims-mismatched index, even when every " +
@@ -324,16 +325,17 @@ class OpsSpec extends AnyFunSuite {
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
     val rest = emb.filter(col("vec_id") =!= 0)
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivf")
-    tmp.toFile.deleteOnExit()
-    val (centroids, assigned) = Similarity.ivfBuild(rest, "embedding", "vec_id")
-    centroids.write.mode("overwrite").parquet(s"$tmp/centroids")
-    assigned.write.mode("overwrite").parquet(s"$tmp/assigned")
-    val probed = Similarity.ivfProbe(
-      spark.read.parquet(s"$tmp/centroids"), spark.read.parquet(s"$tmp/assigned"),
-      "vec_id", q, 20).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val oneShot = Similarity.ivfTopKCosine(rest, "embedding", "vec_id", q, 20)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(probed.toSeq == oneShot.toSeq)
+    try {
+      val (centroids, assigned) = Similarity.ivfBuild(rest, "embedding", "vec_id")
+      centroids.write.mode("overwrite").parquet(s"$tmp/centroids")
+      assigned.write.mode("overwrite").parquet(s"$tmp/assigned")
+      val probed = Similarity.ivfProbe(
+        spark.read.parquet(s"$tmp/centroids"), spark.read.parquet(s"$tmp/assigned"),
+        "vec_id", q, 20).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      val oneShot = Similarity.ivfTopKCosine(rest, "embedding", "vec_id", q, 20)
+        .collect().map(r => (r.getLong(0), r.getDouble(1)))
+      assert(probed.toSeq == oneShot.toSeq)
+    } finally graft.util.Fs.deleteTree(tmp)
   }
 
   test("LSH-blocked cosine pairs are a subset of exact pairs") {

@@ -18,25 +18,26 @@ class ScaleSpec extends AnyFunSuite {
     // external bucketed tables at explicit temp locations (getOrCreate may
     // reuse a session whose warehouse dir we don't control)
     val loc = Files.createTempDirectory("graft_bucketed")
-    loc.toFile.deleteOnExit()
-    orders.write.mode("overwrite").option("path", s"$loc/orders_b")
-      .bucketBy(4, "o_orderkey").sortBy("o_orderkey").saveAsTable("orders_b")
-    lineitem.write.mode("overwrite").option("path", s"$loc/lineitem_b")
-      .bucketBy(4, "l_orderkey").sortBy("l_orderkey").saveAsTable("lineitem_b")
-    val joined = spark.table("lineitem_b")
-      .join(spark.table("orders_b"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
-    val plan = joined.queryExecution.executedPlan.toString
-    // bucketing co-locates both sides: the join itself needs no Exchange
-    // (the only exchange allowed is for the final small aggregation)
-    val joinSection = plan.split("HashAggregate").last
-    assert(!joinSection.contains("Exchange hashpartitioning(l_orderkey"),
-      s"join should use bucketed distribution:\n$plan")
-    // correctness vs unbucketed
-    val expected = lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
-    assert(joined.exceptAll(expected).count() == 0)
+    try {
+      orders.write.mode("overwrite").option("path", s"$loc/orders_b")
+        .bucketBy(4, "o_orderkey").sortBy("o_orderkey").saveAsTable("orders_b")
+      lineitem.write.mode("overwrite").option("path", s"$loc/lineitem_b")
+        .bucketBy(4, "l_orderkey").sortBy("l_orderkey").saveAsTable("lineitem_b")
+      val joined = spark.table("lineitem_b")
+        .join(spark.table("orders_b"),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
+      val plan = joined.queryExecution.executedPlan.toString
+      // bucketing co-locates both sides: the join itself needs no Exchange
+      // (the only exchange allowed is for the final small aggregation)
+      val joinSection = plan.split("HashAggregate").last
+      assert(!joinSection.contains("Exchange hashpartitioning(l_orderkey"),
+        s"join should use bucketed distribution:\n$plan")
+      // correctness vs unbucketed
+      val expected = lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))
+        .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
+      assert(joined.exceptAll(expected).count() == 0)
+    } finally graft.util.Fs.deleteTree(loc)
   }
 
   test("IVF top-k plan is scale-clean: no window, no cartesian product, no corpus shuffle") {

@@ -283,19 +283,20 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming parquet file sink with checkpoint persists appended batches") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_sink")
-    dir.toFile.deleteOnExit()
-    val input = new MemoryStream[Int](7, spark)
-    val q = input.toDF.withColumnRenamed("value", "v")
-      .writeStream.format("parquet")
-      .option("path", s"$dir/out")
-      .option("checkpointLocation", s"$dir/cp")
-      .outputMode("append").start()
     try {
-      input.addData(1, 2, 3); q.processAllAvailable()
-      input.addData(4, 5); q.processAllAvailable()
-      val got = spark.read.parquet(s"$dir/out").as[Int].collect().sorted
-      assert(got.toSeq == (1 to 5))
-    } finally graft.util.QuietLogs.quietStop(q)
+      val input = new MemoryStream[Int](7, spark)
+      val q = input.toDF.withColumnRenamed("value", "v")
+        .writeStream.format("parquet")
+        .option("path", s"$dir/out")
+        .option("checkpointLocation", s"$dir/cp")
+        .outputMode("append").start()
+      try {
+        input.addData(1, 2, 3); q.processAllAvailable()
+        input.addData(4, 5); q.processAllAvailable()
+        val got = spark.read.parquet(s"$dir/out").as[Int].collect().sorted
+        assert(got.toSeq == (1 to 5))
+      } finally graft.util.QuietLogs.quietStop(q)
+    } finally graft.util.Fs.deleteTree(dir)
   }
 
   test("foreachBatch sink runs arbitrary batch logic per micro-batch") {

@@ -286,7 +286,8 @@ class TopicSourceSpec extends AnyFunSuite {
   test("checkpoint restart resumes from committed offsets (no replay, no loss)") {
     val t = "t_resume"
     fill(t, 20)
-    val ckpt = Files.createTempDirectory("topic_ckpt").toString
+    val ckptDir = Files.createTempDirectory("topic_ckpt")
+    val ckpt = ckptDir.toString
     val seen = mutable.ArrayBuffer.empty[String]
     def run(): org.apache.spark.sql.streaming.StreamingQuery =
       spark.readStream.format("graft-topic").option("topic", t).load()
@@ -308,7 +309,7 @@ class TopicSourceSpec extends AnyFunSuite {
       assert(all.length == 35 && all.distinct.length == 35,
         s"restart must continue from the checkpoint: ${all.length} rows, " +
           s"${all.distinct.length} distinct")
-    } finally TopicLog.delete(t)
+    } finally { TopicLog.delete(t); graft.util.Fs.deleteTree(ckptDir) }
   }
 
   test("startingOffsets=latest skips the backlog") {
