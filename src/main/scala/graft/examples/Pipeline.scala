@@ -64,8 +64,8 @@ object Pipeline {
       .select(col("doc_id"), col("text"))
     stage("LM fluency filter", fluent.count())
 
-    // 5. near-dup dedup, the LSH scale path: candidates → exact verify →
-    //    connected components → min-id representative per cluster
+    // 5. near-dup dedup: exact n-gram Jaccard pairs → connected
+    //    components → min-id representative per cluster
     val kept = Dedup.nearDupDedup(
       fluent.join(quality.select("doc_id", "lang"), "doc_id"),
       "doc_id", "text", blockCol = "lang")

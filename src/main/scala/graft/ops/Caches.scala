@@ -64,9 +64,11 @@ object Caches {
     * tracked/scoped checkpoint becomes a RELIABLE `Dataset.checkpoint`
     * into the context checkpoint dir (set it to durable storage via
     * `spark.graft.checkpoint.dir`, or SparkContext.setCheckpointDir;
-    * defaults to a JVM-scoped temp dir so the switch works out of the
-    * box). Same eager materialization, same lineage truncation, same
-    * values — only the storage durability changes. Default OFF: local
+    * defaults, under a local master only, to a JVM-scoped temp dir so
+    * the switch works out of the box; a non-local master must name one,
+    * since executors cannot share the driver's temp dir). Same eager
+    * materialization, same lineage truncation, same values — only the
+    * storage durability changes. Default OFF: local
     * mode keeps the cheap executor-block path (and the bench numbers
     * comparable). Reliable checkpoints leave no persistent-RDD blocks,
     * so release()/releaseAll() are no-ops for them; file cleanup belongs
@@ -82,9 +84,14 @@ object Caches {
   private def checkpointWithIds(df: DataFrame): (DataFrame, Set[Int]) = {
     val sc = df.sparkSession.sparkContext
     if (reliableMode(df)) {
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(df.sparkSession.conf
-          .get("spark.graft.checkpoint.dir", fallbackCkptDir))
+      if (sc.getCheckpointDir.isEmpty) {
+        val dir = df.sparkSession.conf.getOption("spark.graft.checkpoint.dir")
+        require(dir.isDefined || sc.isLocal,
+          s"spark.graft.checkpoint.reliable=true on the non-local master ${sc.master} needs " +
+            "spark.graft.checkpoint.dir (or SparkContext.setCheckpointDir) set to storage every " +
+            "executor can reach; the fallback is a temp directory on the driver")
+        sc.setCheckpointDir(dir.getOrElse(fallbackCkptDir))
+      }
       (df.checkpoint(true), Set.empty)
     } else {
       val before = sc.getPersistentRDDs.keySet

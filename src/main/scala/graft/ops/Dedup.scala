@@ -760,21 +760,25 @@ object Dedup {
     finalLabels.union(singletons)
   }
 
-  /** The whole near-dup dedup pipeline as one call — what a corpus job
-    * actually runs: MinHash+LSH candidates (bucketed, never all-pairs) →
-    * exact-Jaccard verification (linear in candidates) → connected
+  /** The whole near-dup dedup pipeline as one call: exact n-gram Jaccard
+    * pairs within `blockCol` ([[ngramJaccardPairs]]) → connected
     * components (edge-sized rounds) → keep the min-id doc per component.
     * Returns the retained rows of `docs` unchanged in schema. Harness
-    * query x34 is this function verified against the quadratic exact
-    * path's oracle. */
+    * query x34 is this function under the exact path's oracle (x27).
+    *
+    * Every pair at Jaccard ≥ `threshold` is an edge, so the retention
+    * set is exact. MinHash-LSH candidates cannot promise that: a pair at
+    * exactly J = 1/2 shares one of 16 bands of 4 only with probability
+    * 1 − (1 − 2⁻⁴)¹⁶ ≈ 0.64. On the harness corpora the gram self-join is
+    * also the cheapest of the three candidate sources (sf0.01 docs on a
+    * 4-vCPU host, median of 5: 1.39 s against 1.53 s for LSH + verify
+    * and 1.99 s for the [[prefixJaccardParts]] filter + verify); the
+    * prefix filter is the full-recall route for corpora whose hot grams
+    * make the self-join quadratic. */
   def nearDupDedup(docs: DataFrame, idCol: String, textCol: String,
-                   blockCol: String, n: Int = 3, threshold: Double = 0.5,
-                   nHashes: Int = 64, bands: Int = 16,
-                   candidateThreshold: Double = 0.35): DataFrame = {
-    val cands = minhashLshPairs(docs, idCol, textCol, n, nHashes, bands,
-      candidateThreshold)
-    val edges = verifyPairsJaccard(docs, idCol, textCol, blockCol, cands,
-      n, threshold)
+                   blockCol: String, n: Int = 3,
+                   threshold: Double = 0.5): DataFrame = {
+    val edges = ngramJaccardPairs(docs, idCol, textCol, blockCol, n, threshold)
     val comp = connectedComponents(docs.select(col(idCol)), idCol,
       edges.select("a_id", "b_id"))
     keepClusterRepresentatives(docs, idCol, comp)
@@ -1278,7 +1282,7 @@ object Dedup {
 
   /** The matrix TAIL of [[crossSliceDuplication]] over an
     * already-verified pair set — x149's production form: feed
-    * [[minhashLshPairs]] → [[verifyPairsJaccard]] (the x136/x34
+    * [[minhashLshPairs]] → [[verifyPairsJaccard]] (the x136
     * bucketed scale path) and the cell attribution is identical code.
     * Pair-sized throughout: two id-keyed attribution joins and two
     * cell-keyed aggregates. */

@@ -1,6 +1,7 @@
 package graft.plans
 
-import graft.sources.http.{FilterEval, HttpScan, SnapshotCache}
+import graft.sources.http.{FilterEval, HttpFetcher, HttpScan, SnapshotCache}
+import graft.util.Parallel
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -61,9 +62,12 @@ object FullCacheBroadcasts extends Rule[SparkPlan] {
   * one fetch per interval, staleness bounded by the interval), then
   * returns the relation already built from this load, or builds it here
   * on the driver from this load's rows: pushed-filter prefilter (shared
-  * with the scan's reader), the chain's filters and projections, the
-  * mode's relation, one serialized broadcast. There is no collect job and
-  * the scan below never runs. The memo key is the SparkContext plus this
+  * with the scan's reader) and the chain's filters and projections, on
+  * every core in row-order slices, then the mode's relation and one
+  * broadcast. Under a local master the broadcast hands tasks the relation
+  * itself; on any other master it is Spark's serialized `TorrentBroadcast`
+  * (see `FullCacheBroadcastSupport.broadcast`). There is no collect job
+  * and the scan below never runs. The memo key is the SparkContext plus this
   * node's canonical form: the mode (build keys, null-awareness), every
   * filter and projection, and the scan — whose `HttpScan` compares by
   * pruned schema, options and pushed filters.
@@ -100,10 +104,8 @@ case class FullCacheBroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan)
     SQLExecution.withThreadLocalCaptured[Broadcast[Any]](
         session, FullCacheBroadcastSupport.executionContext) {
       try {
-        val chain = FullCacheBroadcastExchangeExec.snapshotChain(child).get
-        val scan = chain.last.asInstanceOf[BatchScanExec].scan.asInstanceOf[HttpScan]
         val relation = SnapshotCache.broadcast(scan.opts, scan.readSchema(),
-          (sparkContext, canonicalized))(build(chain, scan))
+          (sparkContext, canonicalized))(build)
         longMetric("numOutputRows") += relation.numRows
         longMetric("dataSize") += relation.dataSize
         SQLMetrics.postDriverMetricUpdates(sparkContext,
@@ -117,12 +119,23 @@ case class FullCacheBroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan)
       }
     }
 
-  /** The relation over one load's rows, under `BroadcastExchangeExec`'s limits. */
-  private def build(chain: List[SparkPlan], scan: HttpScan)(
-      rows: Array[InternalRow]): SnapshotCache.Relation = {
+  /** This exchange's chain, top first, and the http scan at its foot. */
+  @transient private lazy val chain: List[SparkPlan] =
+    FullCacheBroadcastExchangeExec.snapshotChain(child).get
+
+  @transient private lazy val scan: HttpScan =
+    chain.last.asInstanceOf[BatchScanExec].scan.asInstanceOf[HttpScan]
+
+  private def build(rows: Array[InternalRow]): SnapshotCache.Relation =
+    build(rows, Runtime.getRuntime.availableProcessors, FullCacheBroadcastExchangeExec.MinSliceRows)
+
+  /** The relation over one load's rows, under `BroadcastExchangeExec`'s
+    * limits, with the chain evaluated in at most `maxSlices` slices of at
+    * least `minSliceRows` rows (see [[FullCacheBroadcastExchangeExec.evaluate]]). */
+  private[plans] def build(rows: Array[InternalRow], maxSlices: Int,
+      minSliceRows: Int): SnapshotCache.Relation = {
     val beforeBuild = System.nanoTime()
-    val out = FullCacheBroadcastExchangeExec.evaluate(chain,
-      FilterEval.prefilter(rows, scan.pushed, scan.readSchema()))
+    val out = FullCacheBroadcastExchangeExec.evaluate(chain, scan, rows, maxSlices, minSliceRows)
     val numRows = out.length.toLong
     if (numRows >= maxBroadcastRows)
       throw FullCacheBroadcastSupport.tooManyRowsError(maxBroadcastRows, numRows)
@@ -182,10 +195,33 @@ object FullCacheBroadcastExchangeExec {
   private def pure(e: Expression): Boolean =
     e.deterministic && !e.exists(_.isInstanceOf[PlanExpression[_]])
 
+  /** Fewest rows worth a slice of the build of their own. */
+  private[plans] val MinSliceRows: Int = 1 << 14
+
   /** The chain's output over the scan's rows, evaluated on the driver with
     * the same (codegen'd, else interpreted) predicates and projections its
-    * nodes use, as copied `UnsafeRow`s — what collecting it would return. */
-  private def evaluate(chain: List[SparkPlan], rows: Array[InternalRow]): Array[InternalRow] = {
+    * nodes use, as copied `UnsafeRow`s — what collecting it would return.
+    *
+    * The rows are cut into at most `maxSlices` contiguous slices of at
+    * least `minSliceRows` rows. Each slice runs the scan's pushed-filter
+    * prefilter and the chain through codegen'd instances of its own (they
+    * are not thread-safe), the first on the calling thread and the rest on
+    * the snapshot decode pool; the slices are then joined in row order,
+    * which an `IdentityBroadcastMode` relation keeps. Errors are those of
+    * one pass: every slice finishes, then the lowest slice's is raised. */
+  private def evaluate(chain: List[SparkPlan], scan: HttpScan, rows: Array[InternalRow],
+      maxSlices: Int, minSliceRows: Int): Array[InternalRow] = {
+    val n = rows.length.toLong
+    val slices = math.max(1L, math.min(maxSlices.toLong, n / minSliceRows)).toInt
+    def slice(k: Int): Array[InternalRow] =
+      if (slices == 1) rows else rows.slice((n * k / slices).toInt, (n * (k + 1) / slices).toInt)
+    val parts = Parallel.all((0 until slices).map(k => () =>
+      evaluateSlice(chain, FilterEval.prefilter(slice(k), scan.pushed, scan.readSchema()))): _*)(
+      HttpFetcher.pool)
+    if (slices == 1) parts.head else Array.concat(parts: _*)
+  }
+
+  private def evaluateSlice(chain: List[SparkPlan], rows: Array[InternalRow]): Array[InternalRow] = {
     var it: Iterator[InternalRow] = rows.iterator
     var unsafe = false
     chain.reverseIterator.foreach {

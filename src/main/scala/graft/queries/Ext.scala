@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * quality, fingerprint, language-ID), multimodal binary plumbing.
   * EVERY query carries a full DuckDB oracle. SQL-expressible operators
   * verify directly; approximate operators one of three ways: the LSH
-  * paths (x03/x34) rescore candidates exactly and share the exact twins'
-  * oracles; the sketch queries (q34/x28) emit their bounded-error claim
-  * as a boolean column the oracle pins to TRUE; and the randomized paths
+  * paths (x03/x136/x149) rescore candidates exactly and share the exact
+  * twins' oracles; the sketch queries (q34/x28) emit their bounded-error
+  * claim as a boolean column the oracle pins to TRUE; and the randomized paths
   * (x04/x06/x15/x24/x25) derive ALL randomness from md5 — the one hash
   * both engines share — so the oracle replays the approximation itself
   * bit-for-bit (hyperplanes, affine MinHash seeds, simhash token bits,
@@ -865,22 +865,16 @@ object Ext {
     // near-dup component plus every singleton (completes the
     // pairs → clusters → keep-one chain end-to-end in the harness).
     "x27_dedup_keep_one" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.ngramJaccardPairs(docs,
+      Dedup.nearDupDedup(Tables.documents(s, dir),
           idCol = "doc_id", textCol = "text", blockCol = "lang", n = 3, threshold = 0.5)
-        .select("a_id", "b_id")
-      val comp = Dedup.connectedComponents(docs.select("doc_id"), "doc_id", pairs)
-      Dedup.keepClusterRepresentatives(docs, "doc_id", comp)
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")
     },
 
-    // The 100 TB dedup pipeline END-TO-END, every stage the scale shape:
-    // MinHash+LSH candidates (bucketed) → exact-Jaccard verify (linear in
-    // candidates) → connected components (edge-sized rounds) → keep-one
-    // retention. With full-recall candidates (pinned in OpsSpec) the
-    // retention set equals the exact-path x27, so the whole chain carries
-    // x27's DuckDB oracle.
+    // The dedup pipeline through the call a corpus job makes, with its
+    // defaults: exact n-gram Jaccard pairs → connected components
+    // (edge-sized rounds) → keep-one retention. Every pair at the
+    // threshold is an edge, so it carries x27's DuckDB oracle.
     "x34_dedup_scale_path" -> { (s, dir) =>
       Dedup.nearDupDedup(Tables.documents(s, dir),
           idCol = "doc_id", textCol = "text", blockCol = "lang")
@@ -2208,9 +2202,9 @@ object Ext {
 
     // LSH-FED leakage-safe split (x136): the PRODUCTION path of x130 —
     // at 100 TB nobody computes the exact all-pairs tri-gram components
-    // x130's fixture rides; the caller feeds x34's MinHash-LSH scale
+    // x130's fixture rides; the caller feeds the MinHash-LSH scale
     // path (bucketed candidates → exact-Jaccard verify → components)
-    // and splits those clusters. With full-recall candidates (the x34
+    // and splits those clusters. With full-recall candidates (the
     // OpsSpec pin) the verified pair set — hence components, hence
     // every split assignment — equals the exact path's, so this runs
     // the LSH plan end-to-end under x130's oracle.
@@ -2607,10 +2601,10 @@ object Ext {
     },
 
     // LSH-FED cross-source matrix (x149): the PRODUCTION path of x143
-    // — at 100 TB the pair step is x34's MinHash-LSH bucketed
+    // — at 100 TB the pair step is the MinHash-LSH bucketed
     // candidates → exact-Jaccard verify, not the exact all-gram
     // self-join x143's fixture rides; the matrix tail is the identical
-    // code. With full-recall candidates (the x34 OpsSpec pin) the
+    // code. With full-recall candidates (the OpsSpec pin) the
     // verified pair set — hence every cell count — equals the exact
     // path's, so this runs the LSH plan end-to-end under x143's
     // oracle (the x136-gating precedent applied to the matrix).

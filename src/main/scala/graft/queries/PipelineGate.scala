@@ -77,8 +77,8 @@ object PipelineGate {
         .filter(col("n_transitions") === 0 || col("nll_nats") <= col("nll_cut"))
         .select(col("doc_id"), col("text"))
         .join(docs.select(col("doc_id"), col("lang")), "doc_id"))
-    // 5. near-dup keep-one over the rewritten texts (x34's scale path:
-    //    LSH candidates → exact verify → components → min-id keep)
+    // 5. near-dup keep-one over the rewritten texts (x34's pipeline:
+    //    exact n-gram Jaccard pairs → components → min-id keep)
     val kept = localCheckpointTracked(
       Dedup.nearDupDedup(fluent, "doc_id", "text", blockCol = "lang"))
     // 6. sqrt-temperature language rebalancing (x54), downsample-only

@@ -59,7 +59,10 @@ object HttpFetcher extends Logging {
     * of its own. */
   private[http] val MinChunkChars: Int = 1 << 20
 
-  private lazy val pool: ExecutionContext = {
+  /** The `http-full-cache-decode-N` daemon threads, one per core: the
+    * decode's chunks run here, and so do the slices of a lookup relation's
+    * build ([[graft.plans.FullCacheBroadcastExchangeExec]]). */
+  private[graft] lazy val pool: ExecutionContext = {
     val cores = Runtime.getRuntime.availableProcessors
     val named = new AtomicInteger
     val exec = new ThreadPoolExecutor(cores, cores, 30, TimeUnit.SECONDS,

@@ -35,11 +35,14 @@ import scala.collection.concurrent.TrieMap
   * can never pin a stale snapshot.
   *
   * A load fetches and decodes under the key's lock, so concurrent first
-  * touches still make one fetch; the decode itself runs on every core
-  * ([[HttpFetcher.parseRows]] cuts the selected array into chunks and
-  * parses them on the `http-full-cache-decode-N` threads), so a reload
-  * holds the lock, and the micro-batch that found the TTL expired, for
-  * less time.
+  * touches still make one fetch; the decode and the relation build
+  * themselves run on every core ([[HttpFetcher.parseRows]] cuts the
+  * selected array into chunks, the build cuts the rows into slices, and
+  * both run on the `http-full-cache-decode-N` threads), so a reload holds
+  * the lock, and the micro-batch that found the TTL expired, for less
+  * time. Under a local master a relation's broadcast is the relation
+  * itself, which tasks in this JVM read without a serialized copy; on any
+  * other master it is a `TorrentBroadcast`.
   *
   * A failed refresh (after the reader's retries) propagates and fails the
   * query — no stale-serving fallback, matching reference semantics
@@ -55,8 +58,10 @@ object SnapshotCache extends Logging {
   final case class Relation(broadcast: Broadcast[Any], numRows: Long, dataSize: Long)
 
   /** Relations held per load; the least recently used one beyond this is
-    * unpersisted from the executors (the driver keeps its copy until
-    * `ContextCleaner` frees it, so a query still reading it re-fetches). */
+    * dropped, and on a cluster unpersisted from the executors (the driver
+    * keeps its copy until `ContextCleaner` frees it, so a query still
+    * reading it re-fetches; under a local master the query's own
+    * reference keeps the relation alive). */
   val MaxRelationsPerLoad = 8
 
   private type RelationKey = (SparkContext, AnyRef)

@@ -67,6 +67,25 @@ class OpsSpec extends AnyFunSuite {
     assert(keptScale.size < docs.count(), "expected at least one dup removed")
   }
 
+  test("near-dup dedup joins a pair at exactly Jaccard 0.5, which MinHash-LSH misses") {
+    import spark.implicits._
+    // 11 words each, apart in the 6th: 9 distinct trigrams each, 6 shared
+    val docs = Seq(
+      (82L, "hash merge data window column join spark big key part customer", "en"),
+      (150L, "hash merge data window column fast spark big key part customer", "en"),
+      (7L, "a third document that shares no trigram with either", "en"))
+      .toDF("doc_id", "text", "lang")
+    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", "lang", 3, 0.5)
+      .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
+    assert(exact == Seq((82L, 150L, 6L, 9L, 9L, 0.5)))
+    // no band of the pair's signatures agrees, whatever the estimate cut
+    assert(Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 64, 16, threshold = 0.0).isEmpty)
+    val kept = Dedup.nearDupDedup(docs, "doc_id", "text", blockCol = "lang")
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept == Set(7L, 82L))
+    graft.ops.Caches.releaseAll()
+  }
+
   test("dedup-rate ladder: dials ≡ independent chains; tightening τ only drops") {
     val taus = Seq(0.5, 0.8)
     val ladder = Dedup.dedupRateLadder(docs, "doc_id", "text", "lang", 3, taus)

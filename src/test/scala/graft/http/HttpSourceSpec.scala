@@ -7,9 +7,12 @@ import graft.sources.http.SnapshotCache
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.LocalBroadcast
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** End-to-end parity with the reference's five MockServer integration
   * scenarios (ref: HttpLookupConnectorIntegrationTest.scala), re-expressed
@@ -482,6 +485,59 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(server.requestCount == 1)
   }
 
+  test("under a local master, tasks read the built relation itself, not a serialized copy") {
+    import spark.implicits._
+    val df = Enrich.lookupJoin((1 to 12).toDF("id"), users(), Seq("id"), "inner")
+    assert(df.collect().length == 10)
+    val b = fullCacheExchanges(df).head.executeBroadcast[Any]()
+    assert(b.isInstanceOf[LocalBroadcast] && b.id < 0, b.getClass.getName)
+    HttpSourceSpec.read.clear()
+    spark.sparkContext.parallelize(1 to 4, 4).foreach(_ => HttpSourceSpec.read.add(b.value.asInstanceOf[AnyRef]))
+    val read = HttpSourceSpec.read.asScala.toSeq
+    assert(read.size == 4 && read.forall(_ eq b.value.asInstanceOf[AnyRef]))
+  }
+
+  test("a reload leaves the old load's relation unreachable: the local registry pins nothing") {
+    import spark.implicits._
+    def relation(): java.lang.ref.WeakReference[AnyRef] = {
+      val df = Enrich.lookupJoin((1 to 12).toDF("id"), users("cache.refresh-interval" -> "PT1S"),
+        Seq("id"), "inner")
+      assert(df.collect().length == 10)
+      new java.lang.ref.WeakReference(fullCacheExchanges(df).head.executeBroadcast[Any]().value.asInstanceOf[AnyRef])
+    }
+    val old = relation()
+    Thread.sleep(1100)
+    val current = relation()
+    assert(SnapshotCache.loadCount >= 2 && server.requestCount == 2)
+    var gcs = 0
+    while (old.get != null && gcs < 20) { System.gc(); Thread.sleep(50); gcs += 1 }
+    assert(old.get == null, "the replaced load's relation is still reachable")
+    assert(current.get != null, "the live load holds its relation")
+  }
+
+  test("a destroyed or unknown local broadcast id fails loudly when read") {
+    def write(o: AnyRef): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream
+      val oos = new java.io.ObjectOutputStream(out)
+      oos.writeObject(o)
+      oos.close()
+      out.toByteArray
+    }
+    def read(bytes: Array[Byte]): AnyRef =
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes)).readObject()
+    val b = LocalBroadcast("x" * 100000)
+    val bytes = write(b)
+    assert(bytes.length < 500, "the serialized form is the id alone")
+    assert(read(bytes) eq b)
+    b.destroy()
+    val destroyed = intercept[IllegalStateException](read(bytes))
+    assert(destroyed.getMessage.contains(s"Local broadcast ${b.id} ") &&
+      destroyed.getMessage.contains("a local master is required"), destroyed.getMessage)
+    val unknown = intercept[IllegalStateException](LocalBroadcast.resolve(Long.MinValue))
+    assert(unknown.getMessage.contains(s"Local broadcast ${Long.MinValue} ") &&
+      unknown.getMessage.contains("a local master is required"), unknown.getMessage)
+  }
+
   // Must stay the suite's last test: it stops the suite's session. The
   // session it leaves behind is the active one for later suites.
   test("a restarted SparkSession rebuilds the relation instead of reusing a stopped one") {
@@ -502,4 +558,9 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(builds - builds0 == 1)
     assert(server.requestCount == 1)
   }
+}
+
+object HttpSourceSpec {
+  /** What the tasks of one spec read, in this JVM. */
+  val read = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]
 }
