@@ -433,9 +433,6 @@ object VectorExpressions {
     call_function(fnName, a.cast("array<double>"), b.cast("array<double>"))
   }
 
-  def normNative(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(dotNative(a, a))
-
   /** All RHP-LSH band values of `vec` (array<long>, length nBands) in one
     * codegen'd pass — see [[RhpBandsExpr]]. */
   def rhpBandsNative(vec: Column, nBands: Int, bandBits: Int, dims: Int): Column = {

@@ -82,8 +82,7 @@ object Similarity {
     val (cents, assigned) = ivfBuild(proj, "proj", idCol, nLists)
     val qp = lit(randomProjectLocal(queryVec, outDims).toArray)
     val probeLists = cents
-      .withColumn("qscore", VectorFunctions.dot(col("cv"), qp) /
-        (VectorFunctions.norm(col("cv")) * VectorFunctions.norm(qp)))
+      .withColumn("qscore", VectorFunctions.cosine(col("cv"), qp))
       .orderBy(col("qscore").desc, col("centroid_id").asc)
       .limit(nProbe)
       .select("centroid_id")
@@ -93,8 +92,7 @@ object Similarity {
       .select(col(idCol))
       .join(emb.select(col(idCol),
         col(vecCol).cast("array<double>").as("__v")), Seq(idCol))
-      .withColumn("cos_sim", round(VectorFunctions.dot(col("__v"), q) /
-        (VectorFunctions.norm(col("__v")) * VectorFunctions.norm(q)), 6))
+      .withColumn("cos_sim", round(VectorFunctions.cosine(col("__v"), q), 6))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
       .limit(k)
       .select(col(idCol), col("cos_sim"))
@@ -432,9 +430,7 @@ object Similarity {
     val centArr = centroids
       .agg(collect_list(struct(col("centroid_id"), col("cv"))).as("cents"))
     val scored = transform(col("cents"), c => struct(
-      (VectorFunctions.dot(col("vec"), c.getField("cv")) /
-        (VectorFunctions.norm(col("vec")) * VectorFunctions.norm(c.getField("cv"))))
-        .as("s"),
+      VectorFunctions.cosine(col("vec"), c.getField("cv")).as("s"),
       c.getField("centroid_id").cast("long").as("cid")))
     val sorted = array_sort(scored, (l, r) =>
       when(l.getField("s") > r.getField("s"), -1)
@@ -732,8 +728,7 @@ object Similarity {
       col("cents"),
       struct(lit(Double.NegativeInfinity).as("s"), lit(Long.MaxValue).as("cid")),
       (acc, c) => {
-        val score = VectorFunctions.dot(col("vec"), c.getField("cv")) /
-          (VectorFunctions.norm(col("vec")) * VectorFunctions.norm(c.getField("cv")))
+        val score = VectorFunctions.cosine(col("vec"), c.getField("cv"))
         when(score > acc.getField("s") ||
              (score === acc.getField("s") &&
               c.getField("centroid_id") < acc.getField("cid")),
@@ -788,8 +783,7 @@ object Similarity {
       col("ss"),
       struct(lit(Double.NegativeInfinity).as("s"), lit(Long.MaxValue).as("sid")),
       (acc, c) => {
-        val score = VectorFunctions.dot(vec, c.getField("sv")) /
-          (VectorFunctions.norm(vec) * VectorFunctions.norm(c.getField("sv")))
+        val score = VectorFunctions.cosine(vec, c.getField("sv"))
         when(score > acc.getField("s") ||
              (score === acc.getField("s") &&
               c.getField("super_id") < acc.getField("sid")),
@@ -816,8 +810,7 @@ object Similarity {
       element_at(col("cmap"), col("__sup")),
       struct(lit(Double.NegativeInfinity).as("s"), lit(Long.MaxValue).as("cid")),
       (acc, c) => {
-        val score = VectorFunctions.dot(col("vec"), c.getField("cv")) /
-          (VectorFunctions.norm(col("vec")) * VectorFunctions.norm(c.getField("cv")))
+        val score = VectorFunctions.cosine(col("vec"), c.getField("cv"))
         when(score > acc.getField("s") ||
              (score === acc.getField("s") &&
               c.getField("centroid_id") < acc.getField("cid")),
@@ -956,9 +949,7 @@ object Similarity {
         .crossJoin(broadcast(centArr))
         .withColumn("maxcos", aggregate(col("cents"),
           lit(Double.NegativeInfinity), (acc, c) =>
-            greatest(acc, VectorFunctions.dot(col("vec"), c.getField("cv")) /
-              (VectorFunctions.norm(col("vec")) *
-               VectorFunctions.norm(c.getField("cv"))))))
+            greatest(acc, VectorFunctions.cosine(col("vec"), c.getField("cv")))))
         .withColumn("d2fix",
           floor((lit(1.0) - col("maxcos")) * lit(1e9)).cast("long"))
         .select(col(idCol), col("vec"), col("d2fix")))
@@ -1027,15 +1018,13 @@ object Similarity {
                queryVec: Seq[Double], k: Int, nProbe: Int = 4): DataFrame = {
     val q = lit(queryVec.toArray)
     val probeLists = centroids
-      .withColumn("qscore", VectorFunctions.dot(col("cv"), q) /
-        (VectorFunctions.norm(col("cv")) * VectorFunctions.norm(q)))
+      .withColumn("qscore", VectorFunctions.cosine(col("cv"), q))
       .orderBy(col("qscore").desc, col("centroid_id").asc)
       .limit(nProbe)
       .select("centroid_id")
     assigned
       .join(broadcast(probeLists), "centroid_id")
-      .withColumn("cos_sim", round(VectorFunctions.dot(col("vec"), q) /
-        (VectorFunctions.norm(col("vec")) * VectorFunctions.norm(q)), 6))
+      .withColumn("cos_sim", round(VectorFunctions.cosine(col("vec"), q), 6))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
       .limit(k)
       .select(col(idCol), col("cos_sim"))
@@ -1518,9 +1507,7 @@ object Similarity {
     cands
       .join(vectors.select(col(idCol),
         col(vecCol).cast("array<double>").as("__v")), Seq(idCol))
-      .withColumn("l2", aggregate(
-        zip_with(col("__v"), q, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x))
+      .withColumn("l2", VectorFunctions.l2sq(col("__v"), q))
       .orderBy(col("l2").asc, col(idCol).asc)
       .limit(k)
       .select(col(idCol), round(col("pq"), 6).as("pq_dist"),
@@ -1707,8 +1694,7 @@ object Similarity {
     require(refine >= 1, s"refine must be >= 1, got $refine")
     val q = lit(queryVec.toArray)
     val cells = centroids
-      .withColumn("qscore", VectorFunctions.dot(col("cv"), q) /
-        (VectorFunctions.norm(col("cv")) * VectorFunctions.norm(q)))
+      .withColumn("qscore", VectorFunctions.cosine(col("cv"), q))
       .orderBy(col("qscore").desc, col("centroid_id").asc)
       .limit(nProbe)
       .select(col("centroid_id").cast("long"))
@@ -1726,9 +1712,7 @@ object Similarity {
     cands
       .join(vectors.select(col(idCol),
         col(vecCol).cast("array<double>").as("__v")), Seq(idCol))
-      .withColumn("l2", aggregate(
-        zip_with(col("__v"), q, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x))
+      .withColumn("l2", VectorFunctions.l2sq(col("__v"), q))
       .orderBy(col("l2").asc, col(idCol).asc)
       .limit(k)
       .select(col(idCol), round(col("pq"), 6).as("pq_dist"),
@@ -1876,74 +1860,82 @@ object Similarity {
                     codebook: Array[Array[Double]], k: Int,
                     nProbe: Int = 4, refine: Int = 3, m: Int = 8,
                     dims: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    val adcScored = ivfPqAdcRanked(centroids, index, vecCol, idCol,
-      queries, qIdCol, codebook, nProbe, m, dims)
-    // two-phase ADC cut (VERDICT r9 watch item): a hot cell puts its
-    // whole membership in one query's window partition — the salted
-    // local cut bounds it; ranks are identical (TopK scaladoc)
-    val cands = TopK.rankTopK(adcScored, "q_id", col(idCol),
-      Seq(col("pq").asc, col(idCol).asc), refine * k, "crk")
-    ivfPqRerankTopK(cands, vectors, vecCol, idCol, queries, qIdCol, k)
+    ivfPqRerankTopK(
+      ivfPqAdcRanked(centroids, index, vecCol, idCol, queries, qIdCol,
+        codebook, nProbe, m, dims),
+      vectors, vecCol, idCol, queries, qIdCol, k, refine)
   }
 
-  /** The shared ADC-scan core of [[ivfPqServeAll]] /
-    * [[ivfPqRecallCostLadder]]: per-query probe cells (top-`nProbe`,
-    * probe rank `rk` RETAINED), one m×K ADC table per query, the
-    * (query-cell, member) equi-join scored in m lookups per row.
-    * Probe sets NEST in the rank, so the widest dial's scan filtered
-    * to `rk ≤ p` IS dial p's scan — the ladder pays the join once. */
+  /** The flattened m×K ADC table of `qv` (a query, or a query residual
+    * `q − c_cell`) against `codebook`: tab[j*K + kk] =
+    * ||qv_sub_j − cb[kk]_sub_j||², one codegen'd fold per row. */
+  private def adcTableCol(qv: Column, codebook: Array[Array[Double]],
+                          nK: Int, m: Int, dims: Int): Column = {
+    val d = dims / m
+    val cbLit = typedLit(codebook.map(_.toSeq).toSeq)
+    transform(sequence(lit(0), lit(m * nK - 1)), idx => {
+      val j = (idx / nK).cast("int")
+      val kk = pmod(idx, lit(nK)).cast("int")
+      aggregate(sequence(lit(1), lit(d)), lit(0.0), (acc, t) => {
+        val diff = element_at(qv, j * d + t) -
+          element_at(element_at(cbLit, kk + 1), j * d + t)
+        acc + diff * diff
+      })
+    })
+  }
+
+  /** ADC distance of a row's `codes` read off its `tab`: m lookups. */
+  private def adcScoreCol(nK: Int, m: Int): Column = aggregate(
+    sequence(lit(0), lit(m - 1)), lit(0.0), (acc, j) =>
+      acc + element_at(col("tab"),
+        j * nK + element_at(col("codes"), j + 1) + 1))
+
+  /** The ADC-scan core of [[ivfPqServeAll]] / [[ivfPqRecallCostLadder]]:
+    * per-query probe cells (top-`nProbe`, probe rank `rk` RETAINED), one
+    * m×K ADC table per query, the (query-cell, member) equi-join scored
+    * in m lookups per row. Probe sets NEST in the rank, so the widest
+    * dial's scan filtered to `rk ≤ p` IS dial p's scan — the ladder pays
+    * the join once. */
   private def ivfPqAdcRanked(centroids: DataFrame, index: DataFrame,
                              vecCol: String, idCol: String,
                              queries: DataFrame, qIdCol: String,
                              codebook: Array[Array[Double]], nProbe: Int,
                              m: Int, dims: Int): DataFrame = {
     require(dims % m == 0, s"m=$m must divide dims=$dims")
-    val d = dims / m
     val nK = codebook.length
-    val cbLit = typedLit(codebook.map(_.toSeq).toSeq)
     val qcells = assignProbeCells(queries, vecCol, qIdCol, centroids, nProbe)
       .select(col(qIdCol).as("q_id"), col("rk"), col("centroid_id"))
-    // one ADC table per query: tab[j*K + kk] = ||q_sub_j − cb[kk]_sub_j||²
     val qtab = queries
       .select(col(qIdCol).as("q_id"),
         col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("tab", transform(sequence(lit(0), lit(m * nK - 1)), idx => {
-        val j = (idx / nK).cast("int")
-        val kk = pmod(idx, lit(nK)).cast("int")
-        aggregate(sequence(lit(1), lit(d)), lit(0.0), (acc, t) => {
-          val diff = element_at(col("qv"), j * d + t) -
-            element_at(element_at(cbLit, kk + 1), j * d + t)
-          acc + diff * diff
-        })
-      }))
+      .withColumn("tab", adcTableCol(col("qv"), codebook, nK, m, dims))
       .select(col("q_id"), col("tab"))
     qcells
       .join(index.select(col(idCol), col("centroid_id"), col("codes")),
         "centroid_id")
       .join(qtab, "q_id")
-      .withColumn("pq", aggregate(
-        sequence(lit(0), lit(m - 1)), lit(0.0), (acc, j) =>
-          acc + element_at(col("tab"),
-            j * nK + element_at(col("codes"), j + 1) + 1)))
+      .withColumn("pq", adcScoreCol(nK, m))
   }
 
-  /** The shared refine tail: exact-L2 rerank of an ADC candidate frame
-    * (must carry q_id, `idCol`, pq) to per-query top-`k`. */
-  private def ivfPqRerankTopK(cands: DataFrame, vectors: DataFrame,
+  /** The refine tail every IVF×PQ batch serve and dial shares: the
+    * per-query ADC cut of a scan frame (q_id, `idCol`, pq) to refine·k,
+    * then the exact-L2 rerank to top-`k`. The cut is two-phase: a hot
+    * cell puts its whole membership in one query's window partition —
+    * the salted local cut bounds it; ranks are identical (TopK
+    * scaladoc). */
+  private def ivfPqRerankTopK(scan: DataFrame, vectors: DataFrame,
                               vecCol: String, idCol: String,
                               queries: DataFrame, qIdCol: String,
-                              k: Int): DataFrame = {
+                              k: Int, refine: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    cands
+    TopK.rankTopK(scan, "q_id", col(idCol),
+        Seq(col("pq").asc, col(idCol).asc), refine * k, "crk")
       .join(queries.select(col(qIdCol).as("q_id"),
         col(vecCol).cast("array<double>").as("__qv")), "q_id")
       .join(vectors.select(col(idCol),
         col(vecCol).cast("array<double>").as("__v")), Seq(idCol))
-      .withColumn("l2", aggregate(
-        zip_with(col("__v"), col("__qv"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x))
+      .withColumn("l2", VectorFunctions.l2sq(col("__v"), col("__qv")))
       .withColumn("rank", row_number().over(
         Window.partitionBy("q_id").orderBy(col("l2").asc, col(idCol).asc)))
       .filter(col("rank") <= k)
@@ -1968,31 +1960,24 @@ object Similarity {
       vectors, vecCol, idCol, queries, qIdCol, codebook, k, nProbe,
       refine, m, dims)
 
-  /** BATCH serve of the RESIDUAL IVF×PQ ([[ivfPqResidualTopK]] for a
-    * query TABLE — the x154 audit serves every query through the same
-    * trained-residual index): coarse build + residual encode as the
-    * single-query path, then the per-cell ADC table becomes
-    * per-(query, probed cell) — one frame row carrying the m·K
-    * distances of the residual `q − c_cell` against the residual
-    * codebook, built by the same codegen'd fold as [[ivfPqServeAll]]'s
-    * per-query table (queries × nProbe rows, model-sized). Candidates
-    * are the (q_id, cell) × (cell, id, codes) equi-join; salted ADC cut
-    * at refine·k; exact-L2 rerank per query. One row per
-    * (q_id, rank ≤ k). */
-  def ivfPqResidualServeAll(emb: DataFrame, vecCol: String, idCol: String,
-                            queries: DataFrame, qIdCol: String, k: Int,
-                            nLists: Int = 16, nProbe: Int = 4, m: Int = 8,
-                            nCentroids: Int = 16, refine: Int = 3,
-                            trainIters: Int = 0, coarseIters: Int = 0,
-                            dims: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(refine >= 1, s"refine must be >= 1, got $refine")
+  /** The RESIDUAL IVFADC index every residual path serves from: coarse
+    * cells ([[ivfBuildKmeans]] when `coarseIters > 0`, else
+    * [[ivfBuild]]), the residual frame `v − c_cell`, its codebook
+    * ([[pqTrainCodebook]] on the residuals when `trainIters > 0`, else
+    * the sampled one) and the residual codes. Returns (cells with their
+    * `cv`, (idCol, centroid_id, codes), codebook). */
+  private def ivfPqResidualBuild(emb: DataFrame, vecCol: String,
+                                 idCol: String, nLists: Int, m: Int,
+                                 nCentroids: Int, trainIters: Int,
+                                 coarseIters: Int, dims: Int)
+      : (DataFrame, DataFrame, Array[Array[Double]]) = {
     require(dims % m == 0, s"m=$m must divide dims=$dims")
-    val d = dims / m
-    val nK = nCentroids
     val (cents, assigned) =
       if (coarseIters > 0) ivfBuildKmeans(emb, vecCol, idCol, nLists, coarseIters)
       else ivfBuild(emb, vecCol, idCol, nLists)
+    // persisted: the residual frame feeds the codebook sample/training,
+    // the encode pass and the candidate joins — unbroken laziness would
+    // re-run the assignment fold per consumer (per training round ×2)
     val resid = Caches.persistTracked(assigned
       .join(broadcast(cents), "centroid_id")
       .select(col(idCol), col("centroid_id"),
@@ -2001,49 +1986,56 @@ object Similarity {
       if (trainIters > 0)
         pqTrainCodebook(resid, "rvec", idCol, nCentroids, m, dims, trainIters)
       else pqBuildCodebook(resid, "rvec", idCol, nCentroids)
-    val encoded = resid.withColumn("codes",
+    val codes = resid.withColumn("codes",
         graft.functions.VectorExpressions.pqCodesNative(
           col("rvec"), cb.flatten, nCentroids, m, dims))
       .select(col(idCol), col("centroid_id"), col("codes"))
-    val cbLit = typedLit(cb.map(_.toSeq).toSeq)
-    val qcells = assignProbeCells(queries, vecCol, qIdCol, cents, nProbe)
-      .select(col(qIdCol).as("q_id"), col("centroid_id"))
-    val qtab = qcells
+    (cents, codes, cb)
+  }
+
+  /** The residual ADC-scan core of [[ivfPqResidualServeAll]] /
+    * [[ivfPqResidualRecallCostLadder]]: per-query probe cells (top-
+    * `nProbe`, probe rank `rk` RETAINED), one ADC table per (query,
+    * probed cell) built from the residual `q − c_cell` (queries × nProbe
+    * rows, model-sized), and the (query-cell, member) equi-join scored
+    * in m lookups per row. As with [[ivfPqAdcRanked]], the widest dial's
+    * scan filtered to `rk ≤ p` IS dial p's scan. */
+  private def ivfPqResidualAdcRanked(cents: DataFrame, codes: DataFrame,
+                                     cb: Array[Array[Double]],
+                                     vecCol: String, queries: DataFrame,
+                                     qIdCol: String, nProbe: Int,
+                                     nCentroids: Int, m: Int,
+                                     dims: Int): DataFrame =
+    assignProbeCells(queries, vecCol, qIdCol, cents, nProbe)
+      .select(col(qIdCol).as("q_id"), col("rk"), col("centroid_id"))
       .join(broadcast(cents), "centroid_id")
       .join(queries.select(col(qIdCol).as("q_id"),
         col(vecCol).cast("array<double>").as("qv")), "q_id")
       .withColumn("rq", zip_with(col("qv"), col("cv"), (a, b) => a - b))
-      .withColumn("tab", transform(sequence(lit(0), lit(m * nK - 1)), idx => {
-        val j = (idx / nK).cast("int")
-        val kk = pmod(idx, lit(nK)).cast("int")
-        aggregate(sequence(lit(1), lit(d)), lit(0.0), (acc, t) => {
-          val diff = element_at(col("rq"), j * d + t) -
-            element_at(element_at(cbLit, kk + 1), j * d + t)
-          acc + diff * diff
-        })
-      }))
-      .select(col("q_id"), col("centroid_id"), col("tab"))
-    val adcScored = qtab
-      .join(encoded, "centroid_id")
-      .withColumn("pq", aggregate(
-        sequence(lit(0), lit(m - 1)), lit(0.0), (acc, j) =>
-          acc + element_at(col("tab"),
-            j * nK + element_at(col("codes"), j + 1) + 1)))
-    val cands = TopK.rankTopK(adcScored, "q_id", col(idCol),
-      Seq(col("pq").asc, col(idCol).asc), refine * k, "crk")
-    cands
-      .join(queries.select(col(qIdCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("__qv")), "q_id")
-      .join(emb.select(col(idCol),
-        col(vecCol).cast("array<double>").as("__v")), Seq(idCol))
-      .withColumn("l2", aggregate(
-        zip_with(col("__v"), col("__qv"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("l2").asc, col(idCol).asc)))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col(idCol).as("vec_id"),
-        round(col("pq"), 6).as("pq_dist"), round(col("l2"), 6).as("l2_dist"))
+      .withColumn("tab", adcTableCol(col("rq"), cb, nCentroids, m, dims))
+      .select(col("q_id"), col("rk"), col("centroid_id"), col("tab"))
+      .join(codes, "centroid_id")
+      .withColumn("pq", adcScoreCol(nCentroids, m))
+
+  /** BATCH serve of the RESIDUAL IVF×PQ ([[ivfPqResidualTopK]] for a
+    * query TABLE — the x154 audit serves every query through the same
+    * trained-residual index): the shared residual build, the per-(query,
+    * probed cell) residual ADC scan, then [[ivfPqServeAll]]'s salted
+    * refine·k cut and exact-L2 rerank. One row per (q_id, rank ≤ k). */
+  def ivfPqResidualServeAll(emb: DataFrame, vecCol: String, idCol: String,
+                            queries: DataFrame, qIdCol: String, k: Int,
+                            nLists: Int = 16, nProbe: Int = 4, m: Int = 8,
+                            nCentroids: Int = 16, refine: Int = 3,
+                            trainIters: Int = 0, coarseIters: Int = 0,
+                            dims: Int = 64): DataFrame = {
+    require(refine >= 1, s"refine must be >= 1, got $refine")
+    val (cents, codes, cb) = ivfPqResidualBuild(emb, vecCol, idCol, nLists,
+      m, nCentroids, trainIters, coarseIters, dims)
+    ivfPqRerankTopK(
+      ivfPqResidualAdcRanked(cents, codes, cb, vecCol, queries, qIdCol,
+        nProbe, nCentroids, m, dims),
+      emb, vecCol, idCol, queries, qIdCol, k, refine)
+      .withColumnRenamed(idCol, "vec_id")
   }
 
   /** RESIDUAL IVF×PQ top-k — classic IVFADC: PQ encodes the residual
@@ -2081,29 +2073,13 @@ object Similarity {
                         coarseIters: Int = 0): DataFrame = {
     require(refine >= 1, s"refine must be >= 1, got $refine")
     val dims = queryVec.length
-    val (cents, assigned) =
-      if (coarseIters > 0) ivfBuildKmeans(emb, vecCol, idCol, nLists, coarseIters)
-      else ivfBuild(emb, vecCol, idCol, nLists)
-    // persisted: the residual frame feeds the codebook sample/training,
-    // the encode pass and the candidate joins — unbroken laziness would
-    // re-run the assignment fold per consumer (per training round ×2)
-    val resid = Caches.persistTracked(assigned
-      .join(broadcast(cents), "centroid_id")
-      .select(col(idCol), col("centroid_id"),
-        zip_with(col("vec"), col("cv"), (a, b) => a - b).as("rvec")))
-    val cb =
-      if (trainIters > 0)
-        pqTrainCodebook(resid, "rvec", idCol, nCentroids, m, dims, trainIters)
-      else pqBuildCodebook(resid, "rvec", idCol, nCentroids)
-    val encoded = resid.withColumn("codes",
-      graft.functions.VectorExpressions.pqCodesNative(
-        col("rvec"), cb.flatten, nCentroids, m, dims))
+    val (cents, codes, cb) = ivfPqResidualBuild(emb, vecCol, idCol, nLists,
+      m, nCentroids, trainIters, coarseIters, dims)
     // coarse probe (the x58 cut) — but keep each cell's centroid vector:
     // the ADC table is per cell, built from the query RESIDUAL q - c
     val q = lit(queryVec.toArray)
     val probed = cents
-      .withColumn("qscore", VectorFunctions.dot(col("cv"), q) /
-        (VectorFunctions.norm(col("cv")) * VectorFunctions.norm(q)))
+      .withColumn("qscore", VectorFunctions.cosine(col("cv"), q))
       .orderBy(col("qscore").desc, col("centroid_id").asc)
       .limit(nProbe)
       .select(col("centroid_id").cast("long"), col("cv"))
@@ -2114,9 +2090,8 @@ object Similarity {
       r.getLong(0) -> adcTable(queryVec.indices.map(i => queryVec(i) - c(i)), cb, m)
     }.toMap
     val tMap = typedLit(tables)
-    val cands = encoded
+    val cands = codes
       .filter(col("centroid_id").isin(cellIds.map(Long.box): _*))
-      .select(col(idCol), col("centroid_id"), col("codes"))
       .withColumn("pq", aggregate(
         sequence(lit(0), lit(m - 1)), lit(0.0), (acc, j) =>
           acc + element_at(element_at(element_at(tMap, col("centroid_id")), j + 1),
@@ -2126,9 +2101,7 @@ object Similarity {
     cands
       .join(emb.select(col(idCol),
         col(vecCol).cast("array<double>").as("__v")), Seq(idCol))
-      .withColumn("l2", aggregate(
-        zip_with(col("__v"), q, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x))
+      .withColumn("l2", VectorFunctions.l2sq(col("__v"), q))
       .orderBy(col("l2").asc, col(idCol).asc)
       .limit(k)
       .select(col(idCol), round(col("pq"), 6).as("pq_dist"),
@@ -2200,9 +2173,7 @@ object Similarity {
     val q = queries.select(col(qIdCol).as("q_id"),
       col(vecCol).cast("array<double>").as("__qv"))
     val scored = e.crossJoin(broadcast(q))
-      .withColumn("l2", aggregate(
-        zip_with(col("__v"), col("__qv"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x))
+      .withColumn("l2", VectorFunctions.l2sq(col("__v"), col("__qv")))
     TopK.rankTopK(scored, "q_id", col("vec_id"),
         Seq(col("l2").asc, col("vec_id").asc), k, "rank")
       .filter(col("rank") <= k)
@@ -2228,9 +2199,7 @@ object Similarity {
       col(vecCol).cast("array<double>").as("__qv"))
     val scored = e.crossJoin(broadcast(q))
       .withColumn("cos_sim",
-        round(VectorFunctions.dot(col("__v"), col("__qv")) /
-          (VectorFunctions.norm(col("__v")) *
-            VectorFunctions.norm(col("__qv"))), 6))
+        round(VectorFunctions.cosine(col("__v"), col("__qv")), 6))
     TopK.rankTopK(scored, "q_id", col("vec_id"),
         Seq(col("cos_sim").desc, col("vec_id").asc), k, "rank")
       .filter(col("rank") <= k)
@@ -2252,25 +2221,38 @@ object Similarity {
                            outDims: Int = 16, nLists: Int = 16,
                            nProbe: Int = 4, dims: Int = 64): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    projectedIvfRankTopK(projectedIvfScored(emb, vecCol, idCol, queries, qIdCol,
+      outDims, nLists, nProbe, dims), idCol, k)
+  }
+
+  /** The probe + rescore core of [[projectedIvfServeAll]] /
+    * [[projectedIvfRecallCostLadder]]: the corpus projects ONCE
+    * (checkpointed), the IVF builds over projected vectors, queries
+    * project through the SAME column-side folds (bit-parity with
+    * [[randomProjectLocal]] is the pinned convention) and probe their
+    * top-`nProbe` projected cells, probe rank `prk` RETAINED; every
+    * (probed cell, member) pair rescores by the ORIGINAL vectors'
+    * rounded cosine. Returns (q_id, prk, `idCol`, cos_sim) — never the
+    * vectors. Probe sets nest (row_number prefixes are rank-stable), so
+    * the `prk ≤ p` slice IS the nProbe = p frame. */
+  private def projectedIvfScored(emb: DataFrame, vecCol: String,
+                                 idCol: String, queries: DataFrame,
+                                 qIdCol: String, outDims: Int, nLists: Int,
+                                 nProbe: Int, dims: Int): DataFrame = {
     val proj = Caches.localCheckpointTracked(
       randomProject(emb, vecCol, idCol, outDims, dims))
     val (cents, assigned) = ivfBuild(proj, "proj", idCol, nLists)
-    // queries project through the SAME column-side folds as the corpus
-    // (bit-parity with randomProjectLocal is the pinned convention)
     val qproj = randomProject(
       queries.select(col(qIdCol).as("q_id"), col(vecCol)),
       vecCol, "q_id", outDims, dims)
     val probed = TopK.rankTopK(
         qproj.crossJoin(broadcast(cents))
-          .withColumn("qscore",
-            VectorFunctions.dot(col("cv"), col("proj")) /
-              (VectorFunctions.norm(col("cv")) *
-                VectorFunctions.norm(col("proj")))),
+          .withColumn("qscore", VectorFunctions.cosine(col("cv"), col("proj"))),
         "q_id", col("centroid_id"),
         Seq(col("qscore").desc, col("centroid_id").asc), nProbe, "prk")
       .filter(col("prk") <= nProbe)
-      .select(col("q_id"), col("centroid_id"))
-    val scored = assigned
+      .select(col("q_id"), col("prk"), col("centroid_id"))
+    assigned
       .select(col(idCol), col("centroid_id"))
       .join(probed, "centroid_id")
       .join(emb.select(col(idCol),
@@ -2278,15 +2260,19 @@ object Similarity {
       .join(broadcast(queries.select(col(qIdCol).as("q_id"),
         col(vecCol).cast("array<double>").as("__qv"))), Seq("q_id"))
       .withColumn("cos_sim",
-        round(VectorFunctions.dot(col("__v"), col("__qv")) /
-          (VectorFunctions.norm(col("__v")) *
-            VectorFunctions.norm(col("__qv"))), 6))
+        round(VectorFunctions.cosine(col("__v"), col("__qv")), 6))
+      .select(col("q_id"), col("prk"), col(idCol), col("cos_sim"))
+  }
+
+  /** Per-query top-`k` of a projected scored frame by rounded cosine, id
+    * ties: (q_id, rank, vec_id, cos_sim). */
+  private def projectedIvfRankTopK(scored: DataFrame, idCol: String,
+                                   k: Int): DataFrame =
     TopK.rankTopK(scored, "q_id", col(idCol),
         Seq(col("cos_sim").desc, col(idCol).asc), k, "rank")
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank"), col(idCol).as("vec_id"),
         col("cos_sim"))
-  }
 
   /** Per-query RECALL@k between an approximate candidate frame and the
     * exact ground truth (both (q_id, vec_id), e.g. [[ivfPqServeAll]] vs
@@ -2322,30 +2308,81 @@ object Similarity {
       .withColumn("recall_permille", expr(s"(n_hits * 1000) div ${k}L"))
   }
 
+  /** The nProbe dial contract of every probe-width ladder: at least one
+    * dial, strictly increasing (so the last dial is the widest scan). */
+  private def requireProbeDials(nProbes: Seq[Int]): Unit = {
+    require(nProbes.nonEmpty, "need at least one nProbe dial")
+    require(nProbes.sliding(2).forall(w => w.size < 2 || w(0) < w(1)),
+      s"nProbe dials must be strictly increasing: $nProbes")
+  }
+
+  /** The tail every recall-cost ladder shares. The exact ground truth is
+    * persisted and paid once for ALL dials; each dial brings its leading
+    * columns, its served (q_id, vec_id) frame and its candidate frame —
+    * the dial's slice of the ladder's shared checkpointed scan, so
+    * counting it never rescans an index. One row per dial, in dial
+    * order: (dial columns…, n_queries, sum_recall_permille,
+    * mean_recall_permille, n_candidates), exact integers throughout
+    * (recall_permille is [[recallAtK]]'s integer lane, the mean an
+    * integer div, candidates exact row counts), so a ladder hash-gates. */
+  private def recallCostLadder(exact: DataFrame, queries: DataFrame,
+                               qIdCol: String, k: Int,
+                               dials: Seq[(Seq[Column], DataFrame, DataFrame)])
+      : DataFrame = {
+    val truth = Caches.persistTracked(exact)
+    val qUniverse = queries.select(col(qIdCol).as("q_id"))
+    dials.map { case (dialCols, served, cands) =>
+      recallAtK(served, truth, k, queries = Some(qUniverse))
+        .agg(count(lit(1)).as("n_queries"),
+          sum(col("recall_permille")).as("sum_recall_permille"))
+        .crossJoin(cands.agg(count(lit(1)).as("n_candidates")))
+        .select(dialCols ++ Seq(col("n_queries"), col("sum_recall_permille"),
+          expr("sum_recall_permille div n_queries").as("mean_recall_permille"),
+          col("n_candidates")): _*)
+    }.reduce(_.unionByName(_))
+  }
+
+  /** The dials of an IVF×PQ-family ladder: `scan` (q_id, rk, `idCol`,
+    * pq — an ADC scan at the widest dial) is checkpointed ONCE, and dial
+    * p is its `rk ≤ p` slice pushed through the production cut/rerank
+    * tail ([[ivfPqRerankTopK]]); the slice is the dial's candidates. */
+  private def ivfPqLadderDials(scan: DataFrame, nProbes: Seq[Int],
+                               vectors: DataFrame, vecCol: String,
+                               idCol: String, queries: DataFrame,
+                               qIdCol: String, k: Int, refine: Int)
+      : Seq[(Seq[Column], DataFrame, DataFrame)] = {
+    // eager checkpoint per the iterative-operator discipline; it carries
+    // only (q_id, rk, id, pq)
+    val adc = Caches.localCheckpointTracked(
+      scan.select(col("q_id"), col("rk"), col(idCol), col("pq")))
+    nProbes.map { p =>
+      val dialScan = adc.filter(col("rk") <= p)
+      (Seq(lit(p).as("n_probe")),
+        ivfPqRerankTopK(dialScan, vectors, vecCol, idCol, queries, qIdCol,
+          k, refine).select(col("q_id"), col(idCol).as("vec_id")),
+        dialScan)
+    }
+  }
+
   /** RECALL-vs-COST dial ladder (VERDICT r15 #4): serve ONE built
     * IVF×PQ index at each `nProbes` dial (fixed k/refine) and report,
     * per dial, the recall@k mass over the whole query table and the
     * candidate volume the ADC scan touches — the tuning table a
     * deployer reads to price probe width before freezing it. One row
     * per dial: (n_probe, n_queries, sum_recall_permille,
-    * mean_recall_permille, n_candidates), everything exact integers
-    * (recall_permille is [[recallAtK]]'s integer lane; the mean is an
-    * integer div; candidates are exact row counts), so the whole
-    * ladder hash-gates (harness query x155, the x146 oracle shape × 4
-    * dials with a shared exact tail).
+    * mean_recall_permille, n_candidates) — [[recallCostLadder]]'s exact
+    * integers, so the whole ladder hash-gates (harness query x155, the
+    * x146 oracle shape × 4 dials with a shared exact tail).
     *
     * 100 TB shape: the index is built ONCE and shared by every dial,
-    * and the expensive ADC scan runs ONCE at the widest dial with the
-    * probe rank retained — probe sets nest, so dial p's serve is the
-    * `rk ≤ p` slice of the shared checkpointed scan pushed through the
-    * production cut/rerank tail ([[ivfPqServeAll]]'s own stages, via
-    * the shared [[ivfPqAdcRanked]]/[[ivfPqRerankTopK]] cores — the
-    * spec pins each dial ≡ an independent serve); the candidate count
-    * is the slice's cardinality — nothing ever rescans the index per
-    * dial. The exact ground truth is [[l2TopKAll]] — quadratic by
+    * and the expensive ADC scan ([[ivfPqAdcRanked]], [[ivfPqServeAll]]'s
+    * own core) runs ONCE at the widest dial with the probe rank
+    * retained — probe sets nest, so dial p's serve is the `rk ≤ p`
+    * slice of the shared checkpointed scan (the spec pins each dial ≡
+    * an independent serve); nothing ever rescans the index per dial.
+    * The exact ground truth is [[l2TopKAll]] — quadratic by
     * construction, the documented measurement path (audit a query
-    * SAMPLE at scale), persisted so the ladder pays it once, not once
-    * per dial. */
+    * SAMPLE at scale). */
   def ivfPqRecallCostLadder(centroids: DataFrame, index: DataFrame,
                             vectors: DataFrame, vecCol: String,
                             idCol: String, queries: DataFrame,
@@ -2353,41 +2390,13 @@ object Similarity {
                             codebook: Array[Array[Double]], k: Int,
                             nProbes: Seq[Int], refine: Int = 3,
                             m: Int = 8, dims: Int = 64): DataFrame = {
-    require(nProbes.nonEmpty, "need at least one nProbe dial")
-    require(nProbes.sliding(2).forall(w => w.size < 2 || w(0) < w(1)),
-      s"nProbe dials must be strictly increasing: $nProbes")
+    requireProbeDials(nProbes)
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    val exact = Caches.persistTracked(
-      l2TopKAll(vectors, vecCol, idCol, queries, qIdCol, k))
-    val qUniverse = queries.select(col(qIdCol).as("q_id"))
-    // ONE ADC scan at the widest dial, probe rank retained — dial p's
-    // scan is exactly the rk ≤ p slice (probe sets nest), so the ladder
-    // pays the expensive (query-cell, member) join once, not per dial;
-    // eager checkpoint per the iterative-operator discipline
-    val adc = Caches.localCheckpointTracked(
+    val exact = l2TopKAll(vectors, vecCol, idCol, queries, qIdCol, k)
+    recallCostLadder(exact, queries, qIdCol, k, ivfPqLadderDials(
       ivfPqAdcRanked(centroids, index, vecCol, idCol, queries, qIdCol,
-        codebook, nProbes.max, m, dims)
-        .select(col("q_id"), col("rk"), col(idCol), col("pq")))
-    nProbes.map { p =>
-      val dialScan = adc.filter(col("rk") <= p)
-      val served = ivfPqRerankTopK(
-        TopK.rankTopK(dialScan, "q_id", col(idCol),
-          Seq(col("pq").asc, col(idCol).asc), refine * k, "crk"),
-        vectors, vecCol, idCol, queries, qIdCol, k)
-      val rep = recallAtK(served, exact, k, queries = Some(qUniverse))
-        .agg(count(lit(1)).as("n_queries"),
-          sum(col("recall_permille")).as("sum_recall_permille"))
-      // candidate volume = the dial's ADC scan cardinality, read off the
-      // shared checkpointed scan — never rescans the index
-      val nCand = dialScan
-        .agg(count(lit(1)).as("n_candidates"))
-      rep.crossJoin(nCand)
-        .select(lit(p).as("n_probe"), col("n_queries"),
-          col("sum_recall_permille"),
-          expr("sum_recall_permille div n_queries")
-            .as("mean_recall_permille"),
-          col("n_candidates"))
-    }.reduce(_.unionByName(_))
+        codebook, nProbes.max, m, dims),
+      nProbes, vectors, vecCol, idCol, queries, qIdCol, k, refine))
   }
 
   /** RECALL-vs-COST dial ladder for the BANDED LSH family (VERDICT r16
@@ -2416,8 +2425,7 @@ object Similarity {
     * there). The per-pair frame is checkpointed per group (iterative-
     * operator discipline); the exact ground truth ([[cosineTopKAll]] —
     * quadratic by construction, the documented measurement path: audit
-    * a query SAMPLE at 100 TB) is persisted and paid once for ALL
-    * dials. */
+    * a query SAMPLE at 100 TB) is paid once for ALL dials. */
   def annBandedRecallCostLadder(corpus: DataFrame, queries: DataFrame,
                                 vecCol: String, idCol: String,
                                 qIdCol: String, k: Int,
@@ -2429,14 +2437,12 @@ object Similarity {
       require(n >= 1 && b >= 1 && b <= 16,
         s"dial out of range: nBands=$n, bandBits=$b")
     }
-    val exact = Caches.persistTracked(
-      cosineTopKAll(corpus, vecCol, idCol, queries, qIdCol, k))
-    val qUniverse = queries.select(col(qIdCol).as("q_id"))
+    val exact = cosineTopKAll(corpus, vecCol, idCol, queries, qIdCol, k)
     val cVec = corpus.select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("__v"))
     val qVec = queries.select(col(qIdCol).as("q_id"),
       col(vecCol).cast("array<double>").as("__qv"))
-    val out = dials.groupBy(_._2).toSeq.sortBy(_._1).flatMap {
+    val ladderDials = dials.groupBy(_._2).toSeq.sortBy(_._1).flatMap {
       case (bandBits, group) =>
         val maxBands = group.map(_._1).max
         def bandIdx(df: DataFrame, keyCol: String, outName: String) = df
@@ -2457,28 +2463,16 @@ object Similarity {
           val served = TopK.rankTopK(
               cands.join(cVec, "vec_id").join(qVec, "q_id")
                 .withColumn("cos_sim",
-                  round(VectorFunctions.dot(col("__v"), col("__qv")) /
-                    (VectorFunctions.norm(col("__v")) *
-                      VectorFunctions.norm(col("__qv"))), 6)),
+                  round(VectorFunctions.cosine(col("__v"), col("__qv")), 6)),
               "q_id", col("vec_id"),
               Seq(col("cos_sim").desc, col("vec_id").asc), k, "rank")
             .filter(col("rank") <= k)
             .select(col("q_id"), col("vec_id"))
-          val rep = recallAtK(served, exact, k, queries = Some(qUniverse))
-            .agg(count(lit(1)).as("n_queries"),
-              sum(col("recall_permille")).as("sum_recall_permille"))
-          // candidate volume = the slice's cardinality off the shared
-          // checkpointed pair frame — nothing rebuilds per dial
-          val nCand = cands.agg(count(lit(1)).as("n_candidates"))
-          rep.crossJoin(nCand)
-            .select(lit(nBands).as("n_bands"), lit(bandBits).as("band_bits"),
-              col("n_queries"), col("sum_recall_permille"),
-              expr("sum_recall_permille div n_queries")
-                .as("mean_recall_permille"),
-              col("n_candidates"))
+          (Seq(lit(nBands).as("n_bands"), lit(bandBits).as("band_bits")),
+            served, cands)
         }
     }
-    out.reduce(_.unionByName(_))
+    recallCostLadder(exact, queries, qIdCol, k, ladderDials)
   }
 
   /** RECALL-vs-COST dial ladder for the PROJECTED-index family — the
@@ -2491,89 +2485,42 @@ object Similarity {
     * n_candidates) — exact integers throughout (harness query x163).
     *
     * 100 TB shape: projection + IVF build + the (probed cell, member)
-    * rescore all run ONCE at the widest dial with the probe rank
-    * retained — probe sets nest (row_number prefixes are rank-stable),
-    * so dial p is the `prk ≤ p` slice of the shared checkpointed
+    * rescore ([[projectedIvfScored]], the serve's own core) all run
+    * ONCE at the widest dial with the probe rank retained — probe sets
+    * nest, so dial p is the `prk ≤ p` slice of the shared checkpointed
     * scored frame; nothing re-projects, re-probes, or re-scores per
     * dial. The projection WIDTH (`outDims`) deliberately stays a
     * parameter, not a dial: projected coordinates change wholesale
     * with outDims (no nesting — the x160 precedent), so pricing widths
     * means one ladder call per width, each paying its own build. The
     * exact ground truth is the documented quadratic measurement path,
-    * persisted and paid once. */
+    * paid once. */
   def projectedIvfRecallCostLadder(emb: DataFrame, vecCol: String,
                                    idCol: String, queries: DataFrame,
                                    qIdCol: String, k: Int,
                                    nProbes: Seq[Int], outDims: Int = 16,
                                    nLists: Int = 16,
                                    dims: Int = 64): DataFrame = {
-    require(nProbes.nonEmpty, "need at least one nProbe dial")
-    require(nProbes.sliding(2).forall(w => w.size < 2 || w(0) < w(1)),
-      s"nProbe dials must be strictly increasing: $nProbes")
-    val exact = Caches.persistTracked(
-      cosineTopKAll(emb, vecCol, idCol, queries, qIdCol, k))
-    val qUniverse = queries.select(col(qIdCol).as("q_id"))
-    val proj = Caches.localCheckpointTracked(
-      randomProject(emb, vecCol, idCol, outDims, dims))
-    val (cents, assigned) = ivfBuild(proj, "proj", idCol, nLists)
-    val qproj = randomProject(
-      queries.select(col(qIdCol).as("q_id"), col(vecCol)),
-      vecCol, "q_id", outDims, dims)
-    // probe ONCE at the widest dial, rank retained
-    val probed = TopK.rankTopK(
-        qproj.crossJoin(broadcast(cents))
-          .withColumn("qscore",
-            VectorFunctions.dot(col("cv"), col("proj")) /
-              (VectorFunctions.norm(col("cv")) *
-                VectorFunctions.norm(col("proj")))),
-        "q_id", col("centroid_id"),
-        Seq(col("qscore").desc, col("centroid_id").asc), nProbes.max, "prk")
-      .filter(col("prk") <= nProbes.max)
-      .select(col("q_id"), col("prk"), col("centroid_id"))
-    // ...and rescore ONCE: the checkpoint carries only (q_id, prk,
-    // vec_id, cos_sim) — never the vectors
-    val scoredAll = Caches.localCheckpointTracked(assigned
-      .select(col(idCol), col("centroid_id"))
-      .join(probed, "centroid_id")
-      .join(emb.select(col(idCol),
-        col(vecCol).cast("array<double>").as("__v")), Seq(idCol))
-      .join(broadcast(queries.select(col(qIdCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("__qv"))), Seq("q_id"))
-      .withColumn("cos_sim",
-        round(VectorFunctions.dot(col("__v"), col("__qv")) /
-          (VectorFunctions.norm(col("__v")) *
-            VectorFunctions.norm(col("__qv"))), 6))
-      .select(col("q_id"), col("prk"), col(idCol), col("cos_sim")))
-    nProbes.map { p =>
-      val slice = scoredAll.filter(col("prk") <= p)
-      val served = TopK.rankTopK(slice, "q_id", col(idCol),
-          Seq(col("cos_sim").desc, col(idCol).asc), k, "rank")
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col(idCol).as("vec_id"))
-      val rep = recallAtK(served, exact, k, queries = Some(qUniverse))
-        .agg(count(lit(1)).as("n_queries"),
-          sum(col("recall_permille")).as("sum_recall_permille"))
-      val nCand = slice.agg(count(lit(1)).as("n_candidates"))
-      rep.crossJoin(nCand)
-        .select(lit(p).as("n_probe"), col("n_queries"),
-          col("sum_recall_permille"),
-          expr("sum_recall_permille div n_queries")
-            .as("mean_recall_permille"),
-          col("n_candidates"))
-    }.reduce(_.unionByName(_))
+    requireProbeDials(nProbes)
+    val exact = cosineTopKAll(emb, vecCol, idCol, queries, qIdCol, k)
+    val scored = Caches.localCheckpointTracked(projectedIvfScored(emb,
+      vecCol, idCol, queries, qIdCol, outDims, nLists, nProbes.max, dims))
+    recallCostLadder(exact, queries, qIdCol, k, nProbes.map { p =>
+      val slice = scored.filter(col("prk") <= p)
+      (Seq(lit(p).as("n_probe")), projectedIvfRankTopK(slice, idCol, k), slice)
+    })
   }
 
   /** RECALL-vs-COST dial ladder for the RESIDUAL IVFADC family — the
     * x155 discipline on [[ivfPqResidualServeAll]]'s probe width over
     * the SAMPLED residual build (the x146/x155 convention: the ladder
     * prices the serving dial, not training — x154 already audits what
-    * training buys). ONE coarse build + residual encode + per-(query,
-    * cell) ADC tables, the expensive (query-cell, member) scan run
+    * training buys). ONE residual build ([[ivfPqResidualBuild]]), the
+    * expensive per-(query, cell) scan ([[ivfPqResidualAdcRanked]]) run
     * ONCE at the widest dial with the probe rank retained; dial p is
-    * the `rk ≤ p` slice pushed through the production cut/rerank tail
-    * ([[ivfPqRerankTopK]], the shared core), measured against the
-    * persisted exact L2 ground truth (this family reranks by L2). One
-    * row per dial: (n_probe, n_queries, sum_recall_permille,
+    * the `rk ≤ p` slice pushed through the production cut/rerank tail,
+    * measured against the exact L2 ground truth (this family reranks by
+    * L2). One row per dial: (n_probe, n_queries, sum_recall_permille,
     * mean_recall_permille, n_candidates) — exact integers (harness
     * query x164). */
   def ivfPqResidualRecallCostLadder(emb: DataFrame, vecCol: String,
@@ -2583,73 +2530,14 @@ object Similarity {
                                     m: Int = 8, nCentroids: Int = 16,
                                     nLists: Int = 16,
                                     dims: Int = 64): DataFrame = {
-    require(nProbes.nonEmpty, "need at least one nProbe dial")
-    require(nProbes.sliding(2).forall(w => w.size < 2 || w(0) < w(1)),
-      s"nProbe dials must be strictly increasing: $nProbes")
+    requireProbeDials(nProbes)
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    require(dims % m == 0, s"m=$m must divide dims=$dims")
-    val d = dims / m
-    val nK = nCentroids
-    val exact = Caches.persistTracked(
-      l2TopKAll(emb, vecCol, idCol, queries, qIdCol, k))
-    val qUniverse = queries.select(col(qIdCol).as("q_id"))
-    val (cents, assigned) = ivfBuild(emb, vecCol, idCol, nLists)
-    val resid = Caches.persistTracked(assigned
-      .join(broadcast(cents), "centroid_id")
-      .select(col(idCol), col("centroid_id"),
-        zip_with(col("vec"), col("cv"), (a, b) => a - b).as("rvec")))
-    val cb = pqBuildCodebook(resid, "rvec", idCol, nCentroids)
-    val encoded = resid.withColumn("codes",
-        graft.functions.VectorExpressions.pqCodesNative(
-          col("rvec"), cb.flatten, nCentroids, m, dims))
-      .select(col(idCol), col("centroid_id"), col("codes"))
-    val cbLit = typedLit(cb.map(_.toSeq).toSeq)
-    // probe at the widest dial, rank retained; per-(query, cell) ADC
-    // tables from the residual q − c_cell (model-sized)
-    val qcells = assignProbeCells(queries, vecCol, qIdCol, cents,
-        nProbes.max)
-      .select(col(qIdCol).as("q_id"), col("rk"), col("centroid_id"))
-    val qtab = qcells
-      .join(broadcast(cents), "centroid_id")
-      .join(queries.select(col(qIdCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("qv")), "q_id")
-      .withColumn("rq", zip_with(col("qv"), col("cv"), (a, b) => a - b))
-      .withColumn("tab", transform(sequence(lit(0), lit(m * nK - 1)), idx => {
-        val j = (idx / nK).cast("int")
-        val kk = pmod(idx, lit(nK)).cast("int")
-        aggregate(sequence(lit(1), lit(d)), lit(0.0), (acc, t) => {
-          val diff = element_at(col("rq"), j * d + t) -
-            element_at(element_at(cbLit, kk + 1), j * d + t)
-          acc + diff * diff
-        })
-      }))
-      .select(col("q_id"), col("rk"), col("centroid_id"), col("tab"))
-    // ONE ADC scan at the widest dial; the checkpoint carries only
-    // (q_id, rk, id, pq)
-    val adc = Caches.localCheckpointTracked(qtab
-      .join(encoded, "centroid_id")
-      .withColumn("pq", aggregate(
-        sequence(lit(0), lit(m - 1)), lit(0.0), (acc, j) =>
-          acc + element_at(col("tab"),
-            j * nK + element_at(col("codes"), j + 1) + 1)))
-      .select(col("q_id"), col("rk"), col(idCol), col("pq")))
-    nProbes.map { p =>
-      val dialScan = adc.filter(col("rk") <= p)
-      val served = ivfPqRerankTopK(
-          TopK.rankTopK(dialScan, "q_id", col(idCol),
-            Seq(col("pq").asc, col(idCol).asc), refine * k, "crk"),
-          emb, vecCol, idCol, queries, qIdCol, k)
-        .select(col("q_id"), col(idCol).as("vec_id"))
-      val rep = recallAtK(served, exact, k, queries = Some(qUniverse))
-        .agg(count(lit(1)).as("n_queries"),
-          sum(col("recall_permille")).as("sum_recall_permille"))
-      val nCand = dialScan.agg(count(lit(1)).as("n_candidates"))
-      rep.crossJoin(nCand)
-        .select(lit(p).as("n_probe"), col("n_queries"),
-          col("sum_recall_permille"),
-          expr("sum_recall_permille div n_queries")
-            .as("mean_recall_permille"),
-          col("n_candidates"))
-    }.reduce(_.unionByName(_))
+    val exact = l2TopKAll(emb, vecCol, idCol, queries, qIdCol, k)
+    val (cents, codes, cb) = ivfPqResidualBuild(emb, vecCol, idCol, nLists,
+      m, nCentroids, trainIters = 0, coarseIters = 0, dims)
+    recallCostLadder(exact, queries, qIdCol, k, ivfPqLadderDials(
+      ivfPqResidualAdcRanked(cents, codes, cb, vecCol, queries, qIdCol,
+        nProbes.max, nCentroids, m, dims),
+      nProbes, emb, vecCol, idCol, queries, qIdCol, k, refine))
   }
 }

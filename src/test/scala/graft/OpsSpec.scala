@@ -2692,6 +2692,39 @@ class OpsSpec extends AnyFunSuite {
     graft.ops.Caches.releaseAll()
   }
 
+  test("recall-cost ladders reject empty, non-increasing and duplicate dials before any Spark job") {
+    val e = emb
+    e.schema // resolve the corpus up front: the ladders below must start no job
+    val sc = spark.sparkContext
+    sc.setJobGroup("dial-contract", "recall-cost ladder dial checks")
+    def rejected(ladder: => org.apache.spark.sql.DataFrame): String =
+      intercept[IllegalArgumentException](ladder).getMessage
+    try {
+      val cb = Array.empty[Array[Double]]
+      val probeLadders: Seq[(String, Seq[Int] => org.apache.spark.sql.DataFrame)] = Seq(
+        "IVF×PQ" -> (ps => Similarity.ivfPqRecallCostLadder(e, e, e,
+          "embedding", "vec_id", e, "vec_id", cb, k = 5, nProbes = ps)),
+        "projected" -> (ps => Similarity.projectedIvfRecallCostLadder(e,
+          "embedding", "vec_id", e, "vec_id", k = 5, nProbes = ps)),
+        "residual" -> (ps => Similarity.ivfPqResidualRecallCostLadder(e,
+          "embedding", "vec_id", e, "vec_id", k = 5, nProbes = ps)))
+      probeLadders.foreach { case (name, ladder) =>
+        assert(rejected(ladder(Nil)).contains("need at least one nProbe dial"),
+          s"$name ladder must reject an empty dial list")
+        Seq(Seq(4, 2), Seq(2, 2)).foreach { bad =>
+          assert(rejected(ladder(bad))
+            .contains(s"nProbe dials must be strictly increasing: $bad"),
+            s"$name ladder must reject dials $bad")
+        }
+      }
+      assert(rejected(Similarity.annBandedRecallCostLadder(e, e, "embedding",
+          "vec_id", "vec_id", k = 5, dials = Seq((4, 8), (16, 8), (4, 8))))
+        .contains("duplicate dials"))
+      assert(sc.statusTracker.getJobIdsForGroup("dial-contract").isEmpty,
+        "a dial check ran after a Spark job")
+    } finally sc.clearJobGroup()
+  }
+
   test("kNN graph: shape invariants and recall@5 vs the exact quadratic twin") {
     import org.apache.spark.sql.expressions.Window
     val banded = Similarity.knnGraphBanded(emb, "embedding", "vec_id", k = 5,
