@@ -79,7 +79,7 @@ object Caches {
       .get("spark.graft.checkpoint.reliable", "false").toBoolean
 
   private lazy val fallbackCkptDir: String =
-    graft.util.Fs.scratchRoot("graft_reliable_ckpt_", graft.util.Fs.tmpDir).toString
+    graft.util.Fs.scratchRoot("graft_reliable_ckpt_").toString
 
   private def checkpointWithIds(df: DataFrame): (DataFrame, Set[Int]) = {
     val sc = df.sparkSession.sparkContext

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.sources.http.{FilterEval, HttpFetcher, HttpScan, SnapshotCache}
+import graft.sources.http.{HttpFetcher, HttpScan, SnapshotCache}
 import graft.util.Parallel
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
@@ -61,16 +61,16 @@ object FullCacheBroadcasts extends Rule[SparkPlan] {
   * call runs the TTL check and load exactly as a scan would (so at most
   * one fetch per interval, staleness bounded by the interval), then
   * returns the relation already built from this load, or builds it here
-  * on the driver from this load's rows: pushed-filter prefilter (shared
-  * with the scan's reader) and the chain's filters and projections, on
-  * every core in row-order slices, then the mode's relation and one
+  * on the driver from this load's rows: the chain's filters and
+  * projections, the only place its predicates run, on every core in
+  * row-order slices, then the mode's relation and one
   * broadcast. Under a local master the broadcast hands tasks the relation
   * itself; on any other master it is Spark's serialized `TorrentBroadcast`
   * (see `FullCacheBroadcastSupport.broadcast`). There is no collect job
   * and the scan below never runs. The memo key is the SparkContext plus this
   * node's canonical form: the mode (build keys, null-awareness), every
   * filter and projection, and the scan — whose `HttpScan` compares by
-  * pruned schema, options and pushed filters.
+  * pruned schema and options.
   *
   * Row and size limits, `spark.sql.broadcastTimeout` and the SQL metrics
   * follow `BroadcastExchangeExec`; a reused relation reports its row count
@@ -135,7 +135,7 @@ case class FullCacheBroadcastExchangeExec(mode: BroadcastMode, child: SparkPlan)
   private[plans] def build(rows: Array[InternalRow], maxSlices: Int,
       minSliceRows: Int): SnapshotCache.Relation = {
     val beforeBuild = System.nanoTime()
-    val out = FullCacheBroadcastExchangeExec.evaluate(chain, scan, rows, maxSlices, minSliceRows)
+    val out = FullCacheBroadcastExchangeExec.evaluate(chain, rows, maxSlices, minSliceRows)
     val numRows = out.length.toLong
     if (numRows >= maxBroadcastRows)
       throw FullCacheBroadcastSupport.tooManyRowsError(maxBroadcastRows, numRows)
@@ -203,20 +203,19 @@ object FullCacheBroadcastExchangeExec {
     * nodes use, as copied `UnsafeRow`s — what collecting it would return.
     *
     * The rows are cut into at most `maxSlices` contiguous slices of at
-    * least `minSliceRows` rows. Each slice runs the scan's pushed-filter
-    * prefilter and the chain through codegen'd instances of its own (they
-    * are not thread-safe), the first on the calling thread and the rest on
-    * the snapshot decode pool; the slices are then joined in row order,
-    * which an `IdentityBroadcastMode` relation keeps. Errors are those of
+    * least `minSliceRows` rows. Each slice runs the chain — its filters are
+    * the only ones the build applies — through codegen'd instances of its
+    * own (they are not thread-safe), the first on the calling thread and
+    * the rest on the snapshot decode pool; the slices are then joined in
+    * row order, which an `IdentityBroadcastMode` relation keeps. Errors are those of
     * one pass: every slice finishes, then the lowest slice's is raised. */
-  private def evaluate(chain: List[SparkPlan], scan: HttpScan, rows: Array[InternalRow],
+  private def evaluate(chain: List[SparkPlan], rows: Array[InternalRow],
       maxSlices: Int, minSliceRows: Int): Array[InternalRow] = {
     val n = rows.length.toLong
     val slices = math.max(1L, math.min(maxSlices.toLong, n / minSliceRows)).toInt
     def slice(k: Int): Array[InternalRow] =
       if (slices == 1) rows else rows.slice((n * k / slices).toInt, (n * (k + 1) / slices).toInt)
-    val parts = Parallel.all((0 until slices).map(k => () =>
-      evaluateSlice(chain, FilterEval.prefilter(slice(k), scan.pushed, scan.readSchema()))): _*)(
+    val parts = Parallel.all((0 until slices).map(k => () => evaluateSlice(chain, slice(k))): _*)(
       HttpFetcher.pool)
     if (slices == 1) parts.head else Array.concat(parts: _*)
   }

@@ -36,9 +36,9 @@ object Ext {
     * new one is handed out — repeated oracle/bench runs hold at most one
     * live tree per query (the returned frame reads its tree lazily, so
     * deletion must wait for the next same-name invocation), and the
-    * root ([[graft.util.Fs.scratchRoot]], tmpfs when writable) is removed
-    * at JVM exit. Part of what these parquet tree writes paid, on ext4
-    * and tmpfs alike, was Hadoop forking `chmod`/`readlink` per file;
+    * root ([[graft.util.Fs.scratchRoot]], under `java.io.tmpdir`) is
+    * removed at JVM exit. Part of what these parquet tree writes paid, on
+    * ext4 and tmpfs alike, was Hadoop forking `chmod`/`readlink` per file;
     * `GraftSession`'s fork-free `file:` filesystem removes that. Queries
     * run sequentially in Verify/Bench and in sbt's forked test JVM, so
     * keep-latest is race-free. */

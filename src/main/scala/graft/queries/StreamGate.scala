@@ -289,10 +289,11 @@ object StreamGate {
     * the watermark never advanced mid-drain. */
   private val replayWatermark = "35 days"
 
-  /** One JVM-scoped temp root for every gate checkpoint / sink dir,
-    * deleted at JVM exit ([[graft.util.Fs.scratchRoot]]). A micro-batch
-    * writes an offset log, a commit log and per-partition state deltas on
-    * EVERY trigger. The ~70-90 ms/batch once blamed on ext4 was Hadoop's
+  /** One JVM-scoped temp root under `java.io.tmpdir` for every gate
+    * checkpoint / sink dir, deleted at JVM exit
+    * ([[graft.util.Fs.scratchRoot]]). A micro-batch writes an offset log,
+    * a commit log and per-partition state deltas on EVERY trigger. The
+    * ~70-90 ms/batch once blamed on ext4 was Hadoop's
     * `file:` filesystem forking `chmod`/`readlink` per file operation, on
     * tmpfs too (`CommitLog.add` 28.3 ms on ext4, 30.8 ms on tmpfs);
     * `GraftSession` now installs a fork-free one (2.6 / 1.8 ms), and the

@@ -58,47 +58,40 @@ final class HttpTable(schema: StructType, opts: HttpOptions)
 
 /** Projection pushdown: only the planner-required columns are deserialized
   * from the JSON payload (ref: HttpLookupTableSource.scala:30-34,70).
-  * Filter pushdown: supported predicates pre-filter the snapshot during
-  * iteration (shrinking the broadcast payload); every filter stays
-  * residual so Spark re-applies exact semantics (see [[FilterEval]]). */
+  * Filters are not pushed, as in the reference (ref:
+  * HttpLookupTableSource.scala:25-26): the `Filter` Spark plans above the
+  * scan applies every predicate, and a lookup join's build runs that same
+  * `Filter` (see [[graft.plans.FullCacheBroadcastExchangeExec]]). */
 final class HttpScanBuilder(fullSchema: StructType, opts: HttpOptions)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = fullSchema
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter]):
-      Array[org.apache.spark.sql.sources.Filter] = {
-    pushed = filters.filter(FilterEval.supported(fullSchema, _))
-    filters // all residual
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  override def build(): Scan = new HttpScan(required, opts, pushed)
+  override def build(): Scan = new HttpScan(required, opts)
 }
 
-/** Value equality over (schema, options, pushed filters): `BatchScanExec`
+/** Value equality over (read schema, options): `BatchScanExec`
   * compares scans through their `Batch`, so two plannings of the same read
   * (two micro-batches, two queries) canonicalize equal — the key under
-  * which [[SnapshotCache.broadcast]] memoizes a lookup relation. */
-final class HttpScan(schema: StructType, val opts: HttpOptions,
-                     val pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+  * which [[SnapshotCache.broadcast]] memoizes a lookup relation. A query's
+  * filters are not in the scan: they are `Filter` nodes of the exchange's
+  * chain, which the rest of that key holds. */
+final class HttpScan(schema: StructType, val opts: HttpOptions)
     extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
   override def equals(other: Any): Boolean = other match {
-    case o: HttpScan => o.readSchema() == schema && o.opts == opts && o.pushed.toSeq == pushed.toSeq
+    case o: HttpScan => o.readSchema() == schema && o.opts == opts
     case _ => false
   }
-  override def hashCode(): Int = (schema, opts, pushed.toSeq).hashCode()
+  override def hashCode(): Int = (schema, opts).hashCode()
   override def description(): String =
-    s"http-full-cache url=${opts.url} xpath='${opts.xpath}' " +
-      s"refresh=${opts.refreshInterval} PushedFilters: [${pushed.mkString(", ")}]"
+    s"http-full-cache url=${opts.url} xpath='${opts.xpath}' refresh=${opts.refreshInterval}"
 
   // Single input partition: the payload is one bounded snapshot, fetched
   // whole (ref: HttpInputFormatProvider.scala:80-81). Parallelism comes
   // from the probe side of the enrichment join, never from this scan.
   override def planInputPartitions(): Array[InputPartition] =
-    Array(HttpInputPartition(opts, schema, pushed))
+    Array(HttpInputPartition(opts, schema))
   override def createReaderFactory(): PartitionReaderFactory = HttpReaderFactory
 
   /** Native streaming read: each micro-batch re-emits the current snapshot,
@@ -128,8 +121,7 @@ final class HttpScan(schema: StructType, val opts: HttpOptions,
   }
 }
 
-final case class HttpInputPartition(opts: HttpOptions, schema: StructType,
-    pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+final case class HttpInputPartition(opts: HttpOptions, schema: StructType)
     extends InputPartition
 
 /** Monotonic batch-counter offset: the stream is a clock, not a log — the
@@ -161,7 +153,7 @@ final class HttpMicroBatchStream(opts: HttpOptions, schema: StructType)
 object HttpReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[HttpInputPartition]
-    new HttpPartitionReader(p.opts, p.schema, p.pushed)
+    new HttpPartitionReader(p.opts, p.schema)
   }
 }
 
@@ -169,13 +161,11 @@ object HttpReaderFactory extends PartitionReaderFactory {
   * [[SnapshotCache.get]] iff the TTL has elapsed. Runs in a task; a
   * lookup-join broadcast of the snapshot does not run it, since
   * [[graft.plans.FullCacheBroadcastExchangeExec]] builds the relation on
-  * the driver from the same rows. Pushed filters prune rows at iteration
-  * time (never cached per-filter — the snapshot memo stays per
-  * (payload, schema)). */
-final class HttpPartitionReader(opts: HttpOptions, schema: StructType,
-    pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+  * the driver from the same rows. It emits every row of the snapshot;
+  * the `Filter` above the scan drops the ones a query excludes. */
+final class HttpPartitionReader(opts: HttpOptions, schema: StructType)
     extends PartitionReader[InternalRow] {
-  private val rows = FilterEval.prefilter(SnapshotCache.get(opts, schema), pushed, schema)
+  private val rows = SnapshotCache.get(opts, schema)
   private var i = -1
   override def next(): Boolean = { i += 1; i < rows.length }
   override def get(): InternalRow = rows(i)

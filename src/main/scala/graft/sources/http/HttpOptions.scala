@@ -38,8 +38,6 @@ object HttpOptions {
   val knownKeys: Set[String] = Set(Url, Xpath, CacheRefreshInterval, Method,
     ConnectTimeoutSeconds, ReadTimeoutSeconds, MaxRetries, RetryDelayMs)
 
-  /** Validation matrix of the reference factory
-    * (ref: HttpLookupTableSourceFactory.scala:58-123). */
   /** Keys Spark's session catalog adds around user options when the table
     * is created via SQL DDL (CREATE TABLE ... USING http-full-cache):
     * reserved table properties plus `option.<key>` duplicates of each
@@ -50,6 +48,8 @@ object HttpOptions {
       Set("path", "paths", "provider", "owner", "location", "comment",
         "external").contains(k)
 
+  /** Validation matrix of the reference factory
+    * (ref: HttpLookupTableSourceFactory.scala:58-123). */
   def parse(options: java.util.Map[String, String]): HttpOptions = {
     val m = options.asScala.map { case (k, v) => k.toLowerCase -> v }.toMap
     val unknown = (m.keySet -- knownKeys).filterNot(catalogEnvelope)

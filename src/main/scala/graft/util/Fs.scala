@@ -1,6 +1,6 @@
 package graft.util
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 object Fs {
   /** Recursive delete (children before parents). `Files.walk` holds an
@@ -14,20 +14,12 @@ object Fs {
       } finally walk.close()
     }
 
-  /** `java.io.tmpdir`. */
-  def tmpDir: Path = Paths.get(System.getProperty("java.io.tmpdir"))
-
-  /** A fresh `<prefix>*` directory under `base` (tmpfs when writable,
-    * else `java.io.tmpdir`), deleted with its contents at JVM exit: one
-    * JVM-scoped root for scratch trees that die with the process. */
-  def scratchRoot(prefix: String, base: Path = shmOrTmp): Path = {
-    val root = Files.createTempDirectory(base, prefix)
+  /** A fresh `<prefix>*` directory under `java.io.tmpdir`, deleted with
+    * its contents at JVM exit: one JVM-scoped root for scratch trees that
+    * die with the process. */
+  def scratchRoot(prefix: String): Path = {
+    val root = Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(root)))
     root
-  }
-
-  private def shmOrTmp: Path = {
-    val shm = Paths.get("/dev/shm")
-    if (Files.isWritable(shm)) shm else tmpDir
   }
 }

@@ -3,9 +3,10 @@ package graft.http
 import graft.GraftSession
 import graft.enrich.Enrich
 import graft.plans.FullCacheBroadcastExchangeExec
-import graft.sources.http.SnapshotCache
+import graft.sources.http.{HttpScan, SnapshotCache}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.LocalBroadcast
 import org.apache.spark.sql.functions._
@@ -87,21 +88,35 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(!plan.contains("SortMergeJoin"), plan)
   }
 
-  // Beyond reference parity: supported predicates reach the scan (visible
-  // as PushedFilters in the plan) and pre-prune the snapshot; Spark still
-  // re-applies every filter, so results are exact regardless.
-  test("filter pushdown prunes the snapshot and shows in the plan") {
+  // No filter reaches the source (the reference pushes none, ref:
+  // HttpLookupTableSource.scala:25-26): the Filter Spark plans above the
+  // scan is the only one, and the scan still fetches once.
+  test("a filtered read runs Spark's Filter above the http scan; one fetch") {
     val df = users().filter(col("id") > 5 && col("name").isNotNull)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("GreaterThan(id,5)"),
-      s"expected pushed filter in scan description:\n$plan")
+    val filters = planNodes(df).collect { case f: FilterExec => f }
+    assert(filters.exists(f => f.child match {
+      case InputAdapter(b: BatchScanExec) => b.scan.isInstanceOf[HttpScan]
+      case b: BatchScanExec => b.scan.isInstanceOf[HttpScan]
+      case _ => false
+    }), s"expected a Filter directly above the http scan:\n${df.queryExecution.executedPlan}")
+    assert(!df.queryExecution.executedPlan.toString.contains("PushedFilters"))
     val ids = df.select("id").collect().map(_.getInt(0)).sorted
     assert(ids.toSeq == (6 to 10).toSeq)
     assert(server.requestCount == 1)
   }
 
+  // Each predicate shape is exact on the scan and as the lookup side of a
+  // join, where the chain's Filter in FullCacheBroadcastExchange is the
+  // only filter of the relation build.
   test("pushed-filter results are exact for every predicate shape") {
     import spark.implicits._
+    // `lookup`'s ids that an inner lookup join with one probe row per id in
+    // `ids` returns, through the full-cache exchange
+    def joinedIds(lookup: DataFrame, ids: Range): Seq[Int] = {
+      val joined = Enrich.lookupJoin(ids.toDF("pid"), lookup, $"pid" === $"id", "inner")
+      assert(fullCacheExchanges(joined).size == 1, joined.queryExecution.executedPlan.toString)
+      joined.select("id").collect().map(_.getInt(0)).sorted.toSeq
+    }
     val u = users()
     val checks: Seq[(DataFrame, Set[Int])] = Seq(
       u.filter($"id" === 3)                               -> Set(3),
@@ -112,11 +127,12 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     checks.foreach { case (df, want) =>
       assert(df.select("id").collect().map(_.getInt(0)).toSet == want,
         df.queryExecution.executedPlan.toString)
+      assert(joinedIds(df, 1 to 10) == want.toSeq.sorted)
     }
     // SQL order, not Java's: -0.0 = 0.0, NaN = NaN and above every number,
     // strings by UTF-8 bytes ('\uffff' sorts below an emoji's surrogates in
     // UTF-16 but above them in UTF-8). Checked against a local frame of the
-    // same rows, since the prefilter must never drop a row SQL keeps.
+    // same rows.
     def row(id: Int, x: String, f: String, s: String) =
       "{\"id\": " + id + ", \"x\": " + x + ", \"f\": " + f + ", \"s\": \"" + s + "\"}"
     server.payload = Seq(row(1, "-0.0", "-0.0", "\\uffff"),
@@ -135,12 +151,10 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
       _.filter(!($"x" < 0.0)))
     shapes.foreach { shape =>
       val got = shape(src)
-      assert(got.queryExecution.executedPlan.toString.contains("PushedFilters: [") &&
-        !got.queryExecution.executedPlan.toString.contains("PushedFilters: []"),
-        got.queryExecution.executedPlan.toString)
       val want = shape(local).select("id").collect().map(_.getInt(0)).sorted.toSeq
       assert(got.select("id").collect().map(_.getInt(0)).sorted.toSeq == want,
         got.queryExecution.executedPlan.toString)
+      assert(joinedIds(got, 1 to 4) == want, got.queryExecution.executedPlan.toString)
     }
     assert(shapes.head(src).count() == 4) // -0.0, 0.0, 1.0 and NaN are all >= 0.0
   }
@@ -352,16 +366,19 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(e.getMessage.toLowerCase.contains("schema"))
   }
 
-  /** The http-full-cache broadcasts of an executed plan, through AQE's
-    * stages. */
-  private def fullCacheExchanges(df: DataFrame): Seq[FullCacheBroadcastExchangeExec] = {
+  /** The nodes of an executed plan, through AQE's stages. */
+  private def planNodes(df: DataFrame): Seq[SparkPlan] = {
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => q +: nodes(q.plan)
       case o => o +: o.children.flatMap(nodes)
     }
-    nodes(df.queryExecution.executedPlan).collect { case e: FullCacheBroadcastExchangeExec => e }
+    nodes(df.queryExecution.executedPlan)
   }
+
+  /** The http-full-cache broadcasts of an executed plan. */
+  private def fullCacheExchanges(df: DataFrame): Seq[FullCacheBroadcastExchangeExec] =
+    planNodes(df).collect { case e: FullCacheBroadcastExchangeExec => e }
 
   private def builds = SnapshotCache.relationBuilds
 
@@ -463,6 +480,29 @@ class HttpSourceSpec extends AnyFunSuite with BeforeAndAfterEach {
     } finally pool.shutdownNow()
     assert(server.requestCount == 1)
     assert(builds - builds0 == 1)
+  }
+
+  // ref: HttpLookupConnectorIntegrationTest.scala:207-212, on a plain read
+  test("concurrent plain scans make one fetch") {
+    val loads0 = SnapshotCache.loadCount
+    val n = 4
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    try {
+      val got = (0 until n).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+          def call(): Seq[String] = {
+            start.await()
+            users().select("name").collect().map(_.getString(0)).sorted.toSeq
+          }
+        })
+      }
+      start.countDown()
+      val want = (1 to 10).map(i => s"Mock Name$i").sorted
+      assert(got.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)) == Seq.fill(n)(want))
+    } finally pool.shutdownNow()
+    assert(server.requestCount == 1)
+    assert(SnapshotCache.loadCount - loads0 == 1)
   }
 
   test("a load holds at most MaxRelationsPerLoad relations, evicting the least recently used") {

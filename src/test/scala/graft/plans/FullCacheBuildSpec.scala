@@ -5,7 +5,7 @@ import graft.sources.http.{HttpScan, SnapshotCache}
 import graft.sources.http.testkit.EmbeddedJsonServer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -97,12 +97,13 @@ class FullCacheBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(_.getInt(0)).toSeq == (1 to n))
   }
 
-  test("pushed filter, chain filter and nested projection are the same in 1, 2, 3 and N slices") {
+  test("filter and nested projection are the same in 1, 2, 3 and N slices") {
     val u = users.filter(col("id") > 3 && col("id") % 3 =!= 0)
       .select(col("id"), col("address.geo.lat").as("lat"), upper(col("address.city")).as("city"))
     val p = probe
     val df = p.join(broadcast(u), p("k") === u("id"))
-    assert(df.queryExecution.executedPlan.toString.contains("GreaterThan(id,3)"))
+    assert(FullCacheBroadcastExchangeExec.snapshotChain(exchange(df).child).get
+      .exists(_.isInstanceOf[FilterExec]))
     sameAtEverySliceCount(df)
     sameAtEverySliceCount(p.join(broadcast(u), p("k") > u("id")))
     val want = (4 to n).filter(_ % 3 != 0).map(i => (i, i * 0.5, s"C${i % 5}"))
